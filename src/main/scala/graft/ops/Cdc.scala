@@ -157,7 +157,9 @@ object Cdc {
     while (!done && n < maxBatches) {
       val wm    = store.read(table)
       val batch = keysetBatch(src, idCol, wm, batchSize)
-      if (first && batch.isEmpty) { done = true }
+      // the existence probe: one row, not the sorted batch — `head`
+      // scans partitions one at a time and stops at the first row
+      if (first && src.filter(col(idCol) > wm).head(1).isEmpty) { done = true }
       else {
         val obs = Observation(s"graft_cdc_${table}_$wm")
         val observed = batch.observe(obs,

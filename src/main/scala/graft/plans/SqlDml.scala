@@ -407,7 +407,8 @@ object GraftDml {
                         update, updateAssigns, updateCond, updateFirst,
                         insert, insertAssigns, insertCond, delete,
                         deleteBySource, bySourceDeleteCond, bySourceUpdate) =>
-      import org.apache.spark.sql.functions.{coalesce, lit}
+      import org.apache.spark.sql.Column
+      import org.apache.spark.sql.functions.{coalesce, lit, when}
       val man = new TxnManifest(entry.manifestPath)
       val mergeId = nextBatchId(man)
       val keyCols = keys.map(col)
@@ -436,17 +437,16 @@ object GraftDml {
             man, log)
         case None => GraftDml.committedRead(spark, entry, man)
       }
-      lazy val tgtKeys = tgt.select(keyCols: _*).distinct()
       // SET * / INSERT * resolve against the TARGET's columns: a
       // source-only column (an op flag) must not silently evolve the
       // table schema — Delta's rule, evolution behind the Entry opt-in
-      def aligned(u: DataFrame): DataFrame =
-        if (entry.schemaEvolution) u
-        else {
-          val keep = tgt.columns.filter(c =>
+      def aligned(u: DataFrame, tags: Column*): DataFrame = {
+        val keep =
+          if (entry.schemaEvolution) u.columns.toSeq
+          else tgt.columns.toSeq.filter(c =>
             u.columns.exists(_.equalsIgnoreCase(c)))
-          u.select(keep.map(col).toIndexedSeq: _*)
-        }
+        u.select(keep.map(col) ++ tags: _*)
+      }
       // target-schema projection with an explicit SET list applied:
       // listed columns recompute (cast to the column's type, SQL
       // assignment semantics), unlisted keep their target values —
@@ -460,10 +460,34 @@ object GraftDml {
               .map { case (_, v) => expr(v).cast(f.dataType).as(f.name) }
               .getOrElse(col(s"$tA.${f.name}").as(f.name))
           }.toIndexedSeq: _*))
+      def condOf(c: Option[String]) =
+        c.map(x => coalesce(expr(x), lit(false))).getOrElse(lit(true))
+      // every arm hands Sinks.mergeRows rows TAGGED with what they do
+      // when their key matches a target row and when it does not;
+      // the merge's first pass over the target decides which holds
+      def tags(onMatch: Column, onMiss: Column): Seq[Column] =
+        Seq(onMatch.as(Sinks.OnMatchCol), onMiss.as(Sinks.OnMissCol))
+      val noAction = lit(null).cast("string")
+      // INSERT [AND pred] rows: the predicate (over s) gates which
+      // unmatched source rows insert at all. An explicit column list
+      // computes listed columns from expressions over the source row
+      // and fills unlisted ones from their declared DEFAULT (Delta's
+      // rule) or NULL; GENERATED columns compute from the resolved
+      // values
+      def insertRows(as: Seq[(String, String)]): DataFrame =
+        GraftDml.recomputeGenerated(entry,
+          src.where(condOf(insertCond)).select(tgt.schema.fields.map { f =>
+            as.find(_._1.equalsIgnoreCase(f.name))
+              .map { case (_, v) => expr(v).cast(f.dataType).as(f.name) }
+              .getOrElse(GraftSqlTables.defaultFor(entry, f.name)
+                .map(d => expr(d).cast(f.dataType).as(f.name))
+                .getOrElse(lit(null).cast(f.dataType).as(f.name)))
+          }.toIndexedSeq: _*)).select(col("*") +: tags(noAction, lit(true)): _*)
       // ---- matched arms. Two evaluation strategies:
       //   FAST PATH (unconditional SET * / no update): the delete
       //   condition evaluates over SOURCE columns and whole source
-      //   rows feed the merge — no target join before the probe.
+      //   rows feed the merge — no target join at all; a key any
+      //   matched source row deletes updates none of its rows.
       //   JOINED PATH (conditional and/or column-level UPDATE): the
       //   (target ⋈ source) row evaluates both clauses' conditions,
       //   and CLAUSE ORDER decides which arm claims a row (the first
@@ -472,25 +496,24 @@ object GraftDml {
       //   rows only: an unmatched source row satisfying the delete
       //   predicate still flows to the INSERT arm.
       val useJoined = update && (updateAssigns.isDefined || updateCond.isDefined)
-      val (matchedDel, updArm): (Option[DataFrame], Option[DataFrame]) =
+      val sourceArms: Seq[DataFrame] =
         if (!useJoined) {
-          val mDel = delete.map { cond =>
-            cond.fold(src)(c => src.where(expr(c))).select(keyCols: _*)
-              .join(tgtKeys, keys, "left_semi")
+          val upd = if (update) lit("update") else noAction
+          val onMatch = delete.fold(upd)(d =>
+            when(condOf(d), lit("delete")).otherwise(upd))
+          insertAssigns match {
+            case None =>
+              Seq(aligned(src, tags(onMatch,
+                if (insert) condOf(insertCond) else lit(false)): _*))
+            case Some(as) =>
+              (if (update || delete.nonEmpty)
+                Seq(aligned(src, tags(onMatch, lit(false)): _*))
+              else Nil) :+ insertRows(as)
           }
-          val updateRows =
-            if (!update) None
-            else {
-              val notDel = mDel.fold(src)(d => src.join(d, keys, "left_anti"))
-              Some(aligned(notDel.join(tgtKeys, keys, "left_semi")))
-            }
-          (mDel, updateRows)
         } else {
           val joinCond = keys.map(k => col(s"$tA.$k") === col(s"$sQ.$k"))
             .reduce(_ && _)
           val joined = tgt.alias(tA).join(src, joinCond, "inner")
-          def condOf(c: Option[String]) =
-            c.map(x => coalesce(expr(x), lit(false))).getOrElse(lit(true))
           val uRaw = condOf(updateCond)
           val (updPred, delPred) = delete match {
             case None => (uRaw, None)
@@ -500,7 +523,7 @@ object GraftDml {
               else (!dRaw && uRaw, Some(dRaw))
           }
           val updHit = joined.where(updPred)
-          val updateRows = Some(updateAssigns match {
+          val updateRows = updateAssigns match {
             case Some(as) => applyAssigns(updHit, as)
             case None => // conditional SET *: source side, target shape
               val srcCols = src.columns.toSeq
@@ -509,82 +532,62 @@ object GraftDml {
                 else tgt.columns.toSeq
                   .filter(c => srcCols.exists(_.equalsIgnoreCase(c)))
               updHit.select(keep.map(c => col(s"$sQ.$c").as(c)): _*)
-          })
+          }
           val mDel = delPred.map(p => joined.where(p)
-            .select(keys.map(k => col(s"$tA.$k").as(k)): _*).distinct())
-          (mDel, updateRows)
+            .select(keys.map(k => col(s"$tA.$k").as(k)) ++
+              tags(lit("delete"), lit(false)): _*))
+          val ins =
+            if (!insert) None
+            else Some(insertAssigns.fold(
+              aligned(src.where(condOf(insertCond)),
+                tags(noAction, lit(true)): _*))(insertRows))
+          Seq(updateRows.select(col("*") +: tags(lit("update"), lit(false)): _*)) ++
+            mDel ++ ins
         }
       // NOT MATCHED BY SOURCE: target keys absent from the source —
       // disjoint from the matched arms by construction. Unconditional
       // stays keys-only (cheap); a condition needs the full target row
       val bySourceDel =
         if (!deleteBySource) None
-        else Some(bySourceDeleteCond match {
+        else Some((bySourceDeleteCond match {
           case None =>
-            tgtKeys.join(src.select(keyCols: _*), keys, "left_anti")
+            tgt.select(keyCols: _*).join(src.select(keyCols: _*), keys, "left_anti")
           case Some(c) =>
             tgt.alias(tA).join(src.select(keyCols: _*), keys, "left_anti")
-              .where(org.apache.spark.sql.functions
-                .coalesce(expr(c), org.apache.spark.sql.functions.lit(false)))
-              .select(keys.map(k => col(s"$tA.$k").as(k)): _*).distinct()
-        })
-      val delKeys = (matchedDel, bySourceDel) match {
-        case (Some(a), Some(b)) => Some(a.unionByName(b))
-        case (a, b)             => a.orElse(b)
-      }
-      val inserts =
-        if (!insert) None
-        else {
-          // INSERT [AND pred] sees UNMATCHED source rows only; the
-          // predicate (over s) gates which of them insert at all
-          val srcIns = insertCond.fold(src)(c =>
-            src.where(org.apache.spark.sql.functions
-              .coalesce(expr(c), org.apache.spark.sql.functions.lit(false))))
-          val unmatched = srcIns.join(tgtKeys, keys, "left_anti")
-          Some(insertAssigns match {
-            case None => aligned(unmatched)
-            case Some(as) =>
-              // explicit column list: listed columns compute from
-              // expressions over the source row, unlisted fill from
-              // their declared DEFAULT (Delta's rule) or NULL;
-              // GENERATED columns compute from the resolved values
-              GraftDml.recomputeGenerated(entry,
-                unmatched.select(tgt.schema.fields.map { f =>
-                  as.find(_._1.equalsIgnoreCase(f.name))
-                    .map { case (_, v) => expr(v).cast(f.dataType).as(f.name) }
-                    .getOrElse(GraftSqlTables.defaultFor(entry, f.name)
-                      .map(d => expr(d).cast(f.dataType).as(f.name))
-                      .getOrElse(org.apache.spark.sql.functions.lit(null)
-                        .cast(f.dataType).as(f.name)))
-                }.toIndexedSeq: _*))
-          })
-        }
+              .where(condOf(Some(c)))
+              .select(keys.map(k => col(s"$tA.$k").as(k)): _*)
+        }).select(col("*") +: tags(lit("delete"), lit(false)): _*))
       // full-sync UPDATE arm: unmatched TARGET rows flagged in place,
       // same atomic commit as everything else
       val bySrcUpd = bySourceUpdate.map { case (condSql, assigns) =>
         val unmatched = tgt.alias(tA)
           .join(src.select(keyCols: _*), keys, "left_anti")
         applyAssigns(condSql.fold(unmatched)(c => unmatched.where(expr(c))),
-          assigns)
+          assigns).select(col("*") +: tags(lit("update"), lit(false)): _*)
       }
-      val ups = Seq(updArm, inserts, bySrcUpd).flatten
-        .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      val rows = (sourceArms ++ bySourceDel ++ bySrcUpd)
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+      val writes = update || insert || bySourceUpdate.nonEmpty
       // CHECK constraints + generated-column invariants see the
-      // incoming LOGICAL rows (updated + inserted + flagged) before
-      // anything physicalizes or commits
-      ups.foreach(graft.sources.CheckConstraints.enforce(table,
-        GraftSqlTables.writeChecks(entry), _, "MERGE INTO"))
+      // LOGICAL rows the merge will update or insert before anything
+      // physicalizes or commits
+      def checked(logical: DataFrame => DataFrame)(rows: DataFrame): Unit =
+        graft.sources.CheckConstraints.enforce(table,
+          GraftSqlTables.writeChecks(entry), logical(rows), "MERGE INTO")
       mapLog match {
         case None =>
-          Sinks.merge(spark, ups, delKeys, entry.root, man, keys, mergeId,
-            cdf = entry.cdf, unionRoots = entry.isClone,
-            bucketBy = entry.bucketBy)
+          Sinks.mergeRows(spark, rows, writes, deleteWins = !useJoined,
+            entry.root, man, keys, mergeId, cdf = entry.cdf,
+            unionRoots = entry.isClone, physSchema = None,
+            bucketBy = entry.bucketBy, validate = checked(identity))
         case Some(log) =>
           val phys = physicalizer(table, log)
-          Sinks.merge(spark, ups.map(phys.frame), delKeys.map(phys.frame),
-            entry.root, man, keys.map(phys.column), mergeId, cdf = entry.cdf,
+          Sinks.mergeRows(spark, phys.frame(rows), writes,
+            deleteWins = !useJoined, entry.root, man, keys.map(phys.column),
+            mergeId, cdf = entry.cdf, unionRoots = false,
             physSchema = Some(phys.physSchema),
-            bucketBy = entry.bucketBy.map(phys.bucket))
+            bucketBy = entry.bucketBy.map(phys.bucket),
+            validate = checked(phys.logical))
       }
     case GraftUpdateSpec(table, entry, assigns, condSql) =>
       val man = new TxnManifest(entry.manifestPath)
@@ -819,7 +822,13 @@ object GraftDml {
           s"$table: column '$c' is not in the table's column mapping " +
             s"(have: ${cols.map(_.logical).mkString(", ")})"))
     def frame(df: DataFrame): DataFrame =
-      df.select(df.columns.map(c => col(c).as(column(c))).toIndexedSeq: _*)
+      df.select(df.columns.map(c =>
+        if (c == Sinks.OnMatchCol || c == Sinks.OnMissCol) col(c)
+        else col(c).as(column(c))).toIndexedSeq: _*)
+    /** [[frame]]'s inverse: physical names back to logical ones. */
+    def logical(df: DataFrame): DataFrame =
+      df.select(df.columns.map(c => cols.find(_.physical == c)
+        .fold(col(c))(m => col(c).as(m.logical))).toIndexedSeq: _*)
     /** The bucket spec's PHYSICAL twin — what the Sinks layer routes
       * and marks with. */
     def bucket(b: graft.sources.Bucketing.Spec): graft.sources.Bucketing.Spec =

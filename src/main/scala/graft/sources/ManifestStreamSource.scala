@@ -1400,11 +1400,14 @@ private[graft] object GraftManifestSource {
       cols
     }
 
+  /** The table's merged schema: driver-side footers, memoized per
+    * dir ([[Sinks.readDirs]]), with a `mergeSchema` job only when the
+    * dirs disagree. */
   def mergedSchemaOpt(spark: SparkSession, root: String,
                       manifestPath: String): Option[StructType] = {
     val dirs = new TxnManifest(manifestPath).committedDirs(root)
     if (dirs.isEmpty) None
-    else Some(spark.read.option("mergeSchema", true).parquet(dirs: _*).schema)
+    else Some(Sinks.readDirs(spark, dirs, None).schema)
   }
 
   /** Pushed filters with attribute names translated logical →

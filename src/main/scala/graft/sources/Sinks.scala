@@ -51,8 +51,10 @@ object Sinks {
     * None when the dir's data files do not all share ONE footer
     * schema — a dir written across a schema-evolution boundary must
     * not silently read with one file's footer, so within-dir
-    * divergence routes the whole read back to `mergeSchema`. All
-    * footer reads are driver-side metadata-only (no Spark job), and
+    * divergence routes the whole read back to `mergeSchema`. The
+    * footers are read and converted on the driver (no Spark job; a dir
+    * with nested subdirectories asks Spark's inference, which adds
+    * their partition columns), and
     * the result is memoized on a CONTENT signature of the recursive
     * data-file listing (path + length + mtime) — NOT the parent dir
     * mtime, which does not change when files inside nested
@@ -72,11 +74,15 @@ object Sinks {
     }
   }
 
-  private def dirSchema(spark: org.apache.spark.sql.SparkSession, dir: String)
+  /** The footer key Spark stores a written frame's schema under. */
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private[graft] def dirSchema(spark: org.apache.spark.sql.SparkSession, dir: String)
     : Option[org.apache.spark.sql.types.StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dir)
-    val files = dataFiles(p.getFileSystem(conf), p)
+    val fs = p.getFileSystem(conf)
+    val files = dataFiles(fs, p)
     if (files.isEmpty) return None
     val sig = files.map(f =>
         s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
@@ -86,14 +92,22 @@ object Sinks {
     val footers = files.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-      try r.getFileMetaData.getSchema finally r.close()
+      try r.getFooter finally r.close()
     }
+    // uniform = one parquet schema AND one stored Spark schema, so any
+    // file's footer converts to what Spark's single-footer inference
+    // would give; files in nested subdirectories fall back to Spark's
+    // inference, which adds their partition columns
+    val uniform = footers.map { m =>
+      val meta = m.getFileMetaData
+      (meta.getSchema, meta.getKeyValueMetaData.get(SparkRowMetadataKey))
+    }.distinct.size == 1
     val out =
-      if (footers.distinct.size == 1)
-        // uniform: Spark's own single-footer inference supplies the
-        // StructType (same parquet→Catalyst conversion as any read)
+      if (!uniform) None
+      else if (files.exists(_.getPath.getParent != fs.makeQualified(p)))
         Some(spark.read.parquet(dir).schema)
-      else None
+      else Some(org.apache.spark.sql.graftbridge.FooterBridge.schemaOf(
+        spark, files.head.getPath, footers.head))
     dirSchemaMemo.put(dir, (sig, out))
     out
   }
@@ -589,25 +603,12 @@ object Sinks {
       val matched =
         if (candidates.isEmpty) None
         else {
-          val scan = readDirs(spark, candidates, physSchema)
-          val ranged = range.fold(scan) { r =>
-            scan.where(keys.zipWithIndex.map { case (k, i) =>
-              col(k) >= org.apache.spark.sql.functions.lit(r.get(2 * i)) &&
-                col(k) <= org.apache.spark.sql.functions.lit(r.get(2 * i + 1))
-            }.reduce(_ && _))
-          }
-          // capture positions BEFORE any join (the `_metadata` column
-          // exists only on the scan itself), then drop rows an
-          // EARLIER DV already deleted
-          val withPos = ranged
-            .withColumn(DvFileCol, col("_metadata.file_path"))
-            .withColumn(DvPosCol, col("_metadata.row_index"))
-          val live =
-            if (dvDirs.isEmpty) withPos
-            else withPos.join(
-              spark.read.schema(DvSchema).parquet(dvDirs: _*).select(DvFileCol, DvPosCol),
-              Seq(DvFileCol, DvPosCol), "left_anti")
-          Some(live.join(delKeys, keys, "left_semi")
+          // positions are captured BEFORE any join (the `_metadata`
+          // column exists only on the scan itself); rows an EARLIER DV
+          // already deleted drop
+          val live = livePositions(spark,
+            inRange(readDirs(spark, candidates, physSchema), range, keys), dvDirs)
+          Some(matchedRows(live, delKeys, keys)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         }
       // a delete matching nothing still commits: an empty DV, so the
@@ -701,22 +702,9 @@ object Sinks {
       val matched =
         if (candidates.isEmpty) None
         else {
-          val scan = readDirs(spark, candidates, physSchema)
-          val ranged = range.fold(scan) { r =>
-            scan.where(keys.zipWithIndex.map { case (k, i) =>
-              col(k) >= org.apache.spark.sql.functions.lit(r.get(2 * i)) &&
-                col(k) <= org.apache.spark.sql.functions.lit(r.get(2 * i + 1))
-            }.reduce(_ && _))
-          }
-          val withPos = ranged
-            .withColumn(DvFileCol, col("_metadata.file_path"))
-            .withColumn(DvPosCol, col("_metadata.row_index"))
-          val live =
-            if (dvDirs.isEmpty) withPos
-            else withPos.join(
-              spark.read.schema(DvSchema).parquet(dvDirs: _*).select(DvFileCol, DvPosCol),
-              Seq(DvFileCol, DvPosCol), "left_anti")
-          Some(live.join(upKeys, keys, "left_semi")
+          val live = livePositions(spark,
+            inRange(readDirs(spark, candidates, physSchema), range, keys), dvDirs)
+          Some(matchedRows(live, upKeys, keys)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         }
       val positions = matched match {
@@ -792,31 +780,9 @@ object Sinks {
 
   /** The MERGE engine: upsert arm, delete arm, or both in one commit
     * (Delta `WHEN MATCHED UPDATE / WHEN MATCHED DELETE / WHEN NOT
-    * MATCHED INSERT`).
-    *
-    * Copy-on-write at batch-dir granularity:
-    *   1. PRUNE the probe with the [[BatchStats]] sidecars: dirs whose
-    *      key bounds provably exclude the whole update/delete key
-    *      range are never even scanned (the Delta-log data-skipping
-    *      shape — at 100 TB this turns the O(table) probe into
-    *      O(dirs overlapping the key range));
-    *   2. find the dirs that CONTAIN a matched key (one semi-join
-    *      pass with `input_file_name` over the surviving candidates;
-    *      no forced broadcast — AQE broadcasts a batch-sized key set
-    *      at runtime and degrades a bulk backfill to a shuffle join
-    *      instead of a driver OOM);
-    *   3. rewrite = (affected dirs' rows anti-joined on ALL matched
-    *      keys) ∪ updates, written as ONE new batch dir (insert-only
-    *      rows land there too; deleted rows simply don't);
-    *   4. with `cdf = true`, the matched pre-images the rewrite
-    *      already holds are ALSO written to a `_cdf/batch=<mergeId>`
-    *      sidecar with `_change_type` ∈ {update_preimage,
-    *      update_postimage, insert, delete} — the change-data-feed
-    *      downstream incremental consumers read via [[readChanges]];
-    *   5. one atomic [[TxnManifest.replaceDirs]] commit swaps exactly
-    *      the affected entries for the new dir. A crash before the
-    *      commit leaves the old view; orphan data and `_cdf` dirs are
-    *      vacuumable.
+    * MATCHED INSERT`), mapped onto [[mergeRows]]: every update row
+    * updates its key when it matches and inserts when it does not,
+    * every delete key deletes when it matches.
     *
     * Updates must be UNIQUE on `keys`, and the update and delete key
     * sets DISJOINT (one target row matched by both arms is ambiguous —
@@ -846,11 +812,82 @@ object Sinks {
             unionRoots: Boolean = false,
             physSchema: Option[org.apache.spark.sql.types.StructType] = None,
             bucketBy: Option[Bucketing.Spec] = None)
-    : Unit =
-    withJobDescription(spark, s"graft: merge $root -> batch=$mergeId") {
-    import org.apache.spark.sql.functions.{count, lit}
+    : Unit = {
+    import org.apache.spark.sql.functions.lit
     require(updates.nonEmpty || deletes.nonEmpty,
       "merge needs an upsert arm, a delete arm, or both")
+    val ups = updates.map(_.withColumn(OnMatchCol, lit("update"))
+      .withColumn(OnMissCol, lit(true)))
+    val dels = deletes.map(_.select(keys.map(col) ++
+      Seq(lit("delete").as(OnMatchCol), lit(false).as(OnMissCol)): _*))
+    mergeRows(spark,
+      (ups ++ dels).reduce(_.unionByName(_, allowMissingColumns = true)),
+      writes = updates.nonEmpty, deleteWins = false, root, manifest, keys,
+      mergeId, cdf, unionRoots, physSchema, bucketBy)
+  }
+
+  /** The tags a [[mergeRows]] source row carries: [[OnMatchCol]] is
+    * what it does when its key matches a target row — "update"
+    * (replace the row whole), "delete", or null (nothing) — and
+    * [[OnMissCol]] whether it inserts when its key matches none. */
+  private[graft] val OnMatchCol = "__on_match"
+  private[graft] val OnMissCol = "__on_miss"
+
+  /** The two-pass copy-on-write MERGE core (Delta's
+    * find-touched-files-then-rewrite shape) at batch-dir granularity.
+    *
+    *   1. PRUNE — one small job folds the source keys' per-column
+    *      [min, max]; dirs whose [[BatchStats]] sidecars exclude the
+    *      range (or whose bloom sidecars reject every key of a small
+    *      key set) are never scanned, and the range prunes row groups
+    *      inside the rest;
+    *   2. PASS 1 — one scan of the surviving, range-filtered,
+    *      DV-applied candidate dirs, semi-joined with the source keys
+    *      (no forced broadcast — AQE broadcasts a batch-sized key set
+    *      at runtime and degrades a bulk backfill to a shuffle join
+    *      instead of a driver OOM). The matched target rows, with
+    *      their file, and the source rows are grouped by key once:
+    *      that decides every row's action, the touched files, the
+    *      duplicate and ambiguity checks, and the change feed's
+    *      pre-images and deletes, all from one small persisted frame;
+    *   3. PASS 2 — the rewrite, the only other read of the target:
+    *      the touched dirs' rows anti-joined on the updated and
+    *      deleted keys, ∪ update and insert rows, written as ONE new
+    *      batch dir. With `cdf = true` the `_cdf/batch=<mergeId>`
+    *      sidecar (`_change_type` ∈ {update_preimage,
+    *      update_postimage, insert, delete}) is written beside it
+    *      from pass 1's frame alone;
+    *   4. one atomic [[TxnManifest.replaceDirs]] commit swaps exactly
+    *      the touched entries for the new dir. A crash before the
+    *      commit leaves the old view; orphan data and `_cdf` dirs are
+    *      vacuumable.
+    *
+    * A row's action: a matched key any of whose rows says "delete" is
+    * deleted and none of its rows updates; otherwise a matched row
+    * does its [[OnMatchCol]] and an unmatched row inserts when
+    * [[OnMissCol]] holds. Updates and inserts must then be unique per
+    * key; with `deleteWins = false` a key carrying both an "update"
+    * and a "delete" row fails loudly as ambiguous, matched or not.
+    *
+    * @param source rows with the key columns, the payload an update or
+    *   insert writes, and the two tag columns.
+    * @param writes whether any row may update or insert — false for a
+    *   keys-only delete source, whose columns then never reach the
+    *   rewrite or the feed.
+    * @param validate called on the rows the merge will update or
+    *   insert, before anything is written (CHECK constraints). */
+  private[graft] def mergeRows(spark: org.apache.spark.sql.SparkSession,
+                               source: DataFrame, writes: Boolean,
+                               deleteWins: Boolean, root: String,
+                               manifest: TxnManifest, keys: Seq[String],
+                               mergeId: Int, cdf: Boolean,
+                               unionRoots: Boolean,
+                               physSchema: Option[org.apache.spark.sql.types.StructType],
+                               bucketBy: Option[Bucketing.Spec],
+                               validate: DataFrame => Unit = _ => ())
+    : Unit =
+    withJobDescription(spark, s"graft: merge $root -> batch=$mergeId") {
+    import org.apache.spark.sql.functions.{lit, max, struct, sum, when}
     val (dirs, dvDirs) = splitDv(
       if (unionRoots) manifest.committedDirsAll()
       else manifest.committedDirs(root))
@@ -858,143 +895,140 @@ object Sinks {
     val target = s"$root/batch=$mergeId"
     require(!dirs.contains(target), s"mergeId $mergeId is a live batch")
     val keyCols = keys.map(col)
+    val isUpd = col(OnMatchCol) === "update"
+    val isDel = col(OnMatchCol) === "delete"
 
-    // the source frames may be non-trivial plans (CDC joins); every
-    // check/probe/rewrite/CDF branch below re-evaluates them, so pin
-    // the batch-sized inputs once — MEMORY_AND_DISK, since "batch-
-    // sized" is a contract, not a guarantee. Only frames WE persisted
-    // are unpersisted: evicting a cache the caller created on the same
-    // plan would be a side effect on caller state.
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // the source may be a non-trivial plan (CDC joins, an MV's delta
+    // fold) read by the pruning job and by pass 1, and pass 1's frame
+    // by every branch after it, so both are pinned — MEMORY_AND_DISK,
+    // since "batch-sized" is a contract, not a guarantee
     val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame =
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        pinned += df; df.persist(level)
-      } else df
-    val ups = updates.map(pin)
-    val delKeys = deletes.map(d => pin(d.select(keyCols: _*).distinct()))
-    val allKeys = pin((ups.map(_.select(keyCols: _*)), delKeys) match {
-      case (Some(u), Some(d)) => u.unionByName(d)
-      case (Some(u), None)    => u
-      case (None, Some(d))    => d
-      case _                  => sys.error("unreachable")
-    })
+    def pin(df: DataFrame): DataFrame = {
+      pinned += df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    val src = pin(source.where(isUpd || isDel || col(OnMissCol)))
     try {
-    // ONE preflight job replaces three: per-key counts by arm decide
-    // the duplicate-update and ambiguous-both-arms checks, and the
-    // same pass folds the global per-column [min, max] the dir
-    // pruning needs — the violation branches re-run the original
-    // probes only to name an example key (cold error paths)
-    val tagged = (ups.map(_.select((keyCols :+ lit(1).as("__arm")): _*)),
-        delKeys.map(_.select((keyCols :+ lit(2).as("__arm")): _*))) match {
-      case (Some(u), Some(d)) => u.unionByName(d)
-      case (Some(u), None)    => u
-      case (None, Some(d))    => d
-      case _                  => sys.error("unreachable")
-    }
-    import org.apache.spark.sql.functions.{max => fmax, min => fmin, sum => fsum, when => fwhen}
-    val perKey = tagged.groupBy(keyCols: _*).agg(
-      fsum(fwhen(col("__arm") === 1, 1L).otherwise(0L)).as("__nu"),
-      fmax(col("__arm")).as("__ma"), fmin(col("__arm")).as("__mi"))
-    val pre = perKey.agg(
-      (fmax(col("__nu")) > 1L).as("__dup"),
-      fmax(col("__nu") > 0L && col("__ma") === 2).as("__both") +:
-        keys.flatMap(k => Seq(fmin(col(k)), fmax(col(k)))): _*).collect().head
-    if (!pre.isNullAt(0) && pre.getBoolean(0)) {
-      val dup = ups.get.groupBy(keyCols: _*).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"updates are not unique on (${keys.mkString(", ")}): e.g. " +
-          dup.headOption.map(_.toString).getOrElse(""))
-    }
-    if (!pre.isNullAt(1) && pre.getBoolean(1)) {
-      val both = ups.get.select(keyCols: _*)
-        .join(delKeys.get, keys, "left_semi").limit(1).collect()
-      require(both.isEmpty,
-        s"key matched by BOTH the update and delete arm (ambiguous): " +
-          both.headOption.map(_.toString).getOrElse(""))
-    }
-
-    // the matched keys' [min, max] per key column (folded into the
-    // preflight row above): prunes whole dirs via their stats sidecars
-    // AND row groups inside the surviving files via parquet's own
-    // min/max (the range predicate pushes to the scan) — the probe
-    // seeks instead of scanning
-    val rangeRow = org.apache.spark.sql.Row.fromSeq(
-      (0 until 2 * keys.size).map(i => pre.get(i + 2)))
-    val range = if (rangeRow.anyNull) None else Some(rangeRow)
+    val range = keyRange(src, keys)
+    val srcKeys = src.select(keyCols: _*)
     val candidates = bloomCandidateDirs(spark,
-      statsCandidateDirs(spark, dirs, range, keys), allKeys, keys)
+      statsCandidateDirs(spark, dirs, range, keys), srcKeys, keys)
 
-    // input_file_name yields URIs (file:///…); manifest dirs are plain
-    // paths — normalize both sides before the prefix match
-    def pathOf(s: String) = new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val affectedDirs =
-      if (candidates.isEmpty) Seq.empty[String]
-      else {
-        val scan = readDirs(spark, candidates, physSchema)
-        val ranged = range.fold(scan) { r =>
-          scan.where(keys.zipWithIndex.map { case (k, i) =>
-            col(k) >= org.apache.spark.sql.functions.lit(r.get(2 * i)) &&
-              col(k) <= org.apache.spark.sql.functions.lit(r.get(2 * i + 1))
-          }.reduce(_ && _))
-        }
-        // DV-deleted rows must not count as matches (their file would
-        // be rewritten for nothing) nor resurrect in the rewrite
-        val probe = affectedFileProbe(applyDv(spark, ranged, dvDirs),
-          allKeys, keys)
-        val affectedFiles = probe.collect().map(r => pathOf(r.getString(0)))
-        candidates.filter(d =>
-          affectedFiles.exists(_.startsWith(pathOf(d) + "/")))
-      }
-
-    // schema anchor: the current table (so a pure delete keeps the
-    // table's schema, and a pure insert with new columns evolves it).
-    // def, not val — constructing the frame costs a footer pass over
-    // EVERY dir for schema inference, only worth paying on the
-    // nothing-matched path
+    // PASS 1: the matched target rows, each with its file. When no dir
+    // can match, the table's empty frame stands in (schema anchor: a
+    // pure insert with new columns evolves the table) — a def, since
+    // building it reads every dir's footer schema
     def currentAll = applyDv(spark, readDirs(spark, dirs, physSchema), dvDirs)
+    val matched =
+      if (candidates.isEmpty)
+        currentAll.limit(0).withColumn(DvFileCol, lit(null).cast("string"))
+      else matchedRows(livePositions(spark,
+        inRange(readDirs(spark, candidates, physSchema), range, keys), dvDirs)
+        .drop(DvPosCol), srcKeys, keys)
+    // source rows and matched target rows side by side, grouped by
+    // key: each side's own columns ride in a struct, so neither side's
+    // types bend to the other's
+    val tgtCols = matched.columns.filterNot(_ == DvFileCol).toSeq
+    val srcCols = src.columns.filterNot(Set(OnMatchCol, OnMissCol)).toSeq
+    val byKey = org.apache.spark.sql.expressions.Window.partitionBy(keyCols: _*)
+    def anyOf(c: org.apache.spark.sql.Column) =
+      max(when(c, true).otherwise(false)).over(byKey)
+    def countOf(c: org.apache.spark.sql.Column) =
+      sum(when(c, 1L).otherwise(0L)).over(byKey)
+    val (isSrc, hit, del) =
+      (col("__src").isNotNull, anyOf(col("__tgt").isNotNull), anyOf(isDel))
+    val allKeysSet = keyCols.map(_.isNotNull).reduce(_ && _)
+    val frame = pin(src
+      .select(keyCols ++ Seq(col(OnMatchCol), col(OnMissCol),
+        struct(srcCols.map(col): _*).as("__src")): _*)
+      .unionByName(matched.select(keyCols ++ Seq(col(DvFileCol),
+        struct(tgtCols.map(col): _*).as("__tgt")): _*),
+        allowMissingColumns = true)
+      .select(col("*"),
+        // a source row's action; a target row's is its key's
+        when(isSrc && hit && del, when(isDel, lit("delete")))
+          .when(isSrc && hit, col(OnMatchCol))
+          .when(isSrc, when(col(OnMissCol), lit("insert")))
+          .when(del, lit("delete"))
+          .when(anyOf(isUpd), lit("update")).as("__act"),
+        // updates (of a matched key nothing deletes) or inserts (of an
+        // unmatched key) must be unique per key
+        ((hit && !del && countOf(isUpd) > 1L) ||
+          (!hit && countOf(col(OnMissCol)) > 1L)).as("__dup"),
+        (!lit(deleteWins) && allKeysSet && anyOf(isUpd) && anyOf(isDel))
+          .as("__both"))
+      .where(col("__act").isNotNull || col("__dup") || col("__both")))
+    val act = col("__act")
+    val touched = frame.where(!isSrc && act.isNotNull)
+    def rowsOf(a: String) = frame.where(isSrc && act === a).select("__src.*")
+    val updated = rowsOf("update")
+    val inserted = rowsOf("insert")
+
+    // input file paths are URIs (file:///…); manifest dirs are plain
+    // paths — normalize both sides before the prefix match. The same
+    // collect returns any key failing the checks; rows dedupe within
+    // each partition, so at most a partition's worth of distinct files
+    // reaches the driver, with no shuffle
+    def pathOf(s: String) = new org.apache.hadoop.fs.Path(s).toUri.getPath
+    val found = frame.where((!isSrc && act.isNotNull) || col("__dup") || col("__both"))
+      .select(col(DvFileCol), col("__dup"), col("__both"),
+        when(col("__dup") || col("__both"), struct(keyCols: _*)).as("__key"))
+      .rdd.mapPartitions(_.distinct).collect().distinct
+    found.find(_.getBoolean(2)).foreach { r =>
+      throw new IllegalArgumentException(
+        s"key matched by BOTH the update and delete arm (ambiguous): ${r.get(3)}")
+    }
+    found.find(_.getBoolean(1)).foreach { r =>
+      throw new IllegalArgumentException(
+        s"updates are not unique on (${keys.mkString(", ")}): e.g. ${r.get(3)}")
+    }
+    val files = found.flatMap(r => Option(r.getString(0))).map(pathOf)
+    val affectedDirs =
+      candidates.filter(d => files.exists(_.startsWith(pathOf(d) + "/")))
+    if (writes) validate(updated.unionByName(inserted))
+
+    // PASS 2: the touched dirs less the replaced and deleted keys, ∪
+    // the new rows. The table's current dirs anchor the schema (a
+    // pure delete keeps it; new update columns evolve it)
     val affected =
       if (affectedDirs.isEmpty) currentAll.limit(0)
       else applyDv(spark, readDirs(spark, affectedDirs, physSchema), dvDirs)
-    val kept = affected.join(allKeys, keys, "left_anti")
-    val merged0 = ups.fold(kept)(u =>
-      kept.unionByName(u, allowMissingColumns = true))
+    val kept = affected.join(touched.select(keyCols: _*), keys, "left_anti")
+    val merged0 =
+      if (!writes) kept
+      else kept.unionByName(updated.unionByName(inserted),
+        allowMissingColumns = true)
     // bucketed tables: the rewrite batch routes through the same
     // repartition every bucketed write uses (+ the layout marker
     // below), so the merge output joins exchange-free like any other
     // batch — copy-on-write preserves the layout
     val merged = bucketBy.fold(merged0)(b => Bucketing.routed(merged0, b))
-    // the CDF sidecar reads ONLY the old dirs (`affected`) and the
-    // pinned source frames — nothing it touches depends on the target
-    // write, and both dirs become visible together at the manifest
-    // commit below, so the two writes overlap (guide §2.6): the CDF
-    // job's tasks back-fill slots the rewrite's tail leaves idle, and
-    // the two plans' driver analysis overlaps too
+    // the CDF sidecar reads ONLY pass 1's frame — nothing it touches
+    // depends on the target write, and both dirs become visible
+    // together at the manifest commit below, so the two writes overlap;
+    // the feed marker lands in the sidecar dir after it
     def writeCdf(): Unit = if (cdf) {
-      val ct = (t: String) => lit(t).as(ChangeTypeCol)
-      val parts = Seq.newBuilder[DataFrame]
-      ups.foreach { u =>
-        val uk = u.select(keyCols: _*)
-        val matchedKeys = affected.select(keyCols: _*)
-          .join(uk, keys, "left_semi").distinct()
-        parts += affected.join(uk, keys, "left_semi")
-          .withColumn(ChangeTypeCol, ct("update_preimage"))
-        parts += u.join(matchedKeys, keys, "left_semi")
-          .withColumn(ChangeTypeCol, ct("update_postimage"))
-        parts += u.join(matchedKeys, keys, "left_anti")
-          .withColumn(ChangeTypeCol, ct("insert"))
-      }
-      delKeys.foreach { d =>
-        parts += affected.join(d, keys, "left_semi")
-          .withColumn(ChangeTypeCol, ct("delete"))
-      }
-      val changes = parts.result()
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      changes.write.mode(SaveMode.Overwrite).parquet(s"$root/_cdf/batch=$mergeId")
+      val images = touched.select(col("__tgt.*"),
+        when(act === "update", lit("update_preimage")).otherwise(lit("delete"))
+          .as(ChangeTypeCol))
+      val news =
+        if (!writes) Nil
+        else Seq(updated.withColumn(ChangeTypeCol, lit("update_postimage")),
+          inserted.withColumn(ChangeTypeCol, lit("insert")))
+      (images +: news).reduce(_.unionByName(_, allowMissingColumns = true))
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/_cdf/batch=$mergeId")
     }
-    graft.util.Par.both(
-      writeCdf(), {
+    graft.util.Par.both({
+        writeCdf()
+        // the marker goes in even WITHOUT cdf when rows were MATCHED:
+        // the feed must know this commit collapsed history (and carries
+        // no change records) rather than misread the rewritten table as
+        // an insert batch. A cdf=false merge that matched NOTHING is a
+        // pure insert — its target dir served as inserts is exactly
+        // right, so no marker (and no spurious feed failure)
+        if (cdf || affectedDirs.nonEmpty)
+          writeFeedMarker(root, mergeId, manifest, affectedDirs.toSet)
+      }, {
         merged.write.mode(SaveMode.Overwrite).parquet(target)
         // rewritten dirs may have carried stats sidecars — the merge
         // output keeps the table skippable (cheap footer pass), and any
@@ -1003,14 +1037,6 @@ object Sinks {
         BloomIndex.carryOver(spark, affectedDirs, target)
         bucketBy.foreach(b => Bucketing.writeMarkerWithFiles(spark, target, b))
       })
-    // the marker goes in even WITHOUT cdf when rows were MATCHED: the
-    // feed must know this commit collapsed history (and carries no
-    // change records) rather than misread the rewritten table as an
-    // insert batch. A cdf=false merge that matched NOTHING is a pure
-    // insert — its target dir served as inserts is exactly right, so
-    // no marker (and no spurious feed failure)
-    if (cdf || affectedDirs.nonEmpty)
-      writeFeedMarker(root, mergeId, manifest, affectedDirs.toSet)
     manifest.replaceDirs(affectedDirs.toSet, mergeId, Seq(target))
     } finally {
       pinned.foreach(_.unpersist())
@@ -1086,20 +1112,48 @@ object Sinks {
   /** Change-type column the CDF sidecar carries (Delta's name). */
   val ChangeTypeCol = "_change_type"
 
-  /** The merge probe: distinct files containing a matched key. NO
-    * broadcast hint — a batch-sized key set broadcasts via AQE at
-    * runtime; a bulk backfill degrades to a shuffle join instead of a
-    * driver OOM (ScaleSpec pins both plans). */
+  /** Pass 1's join reduced to the distinct files holding a matched
+    * key. NO broadcast hint — a batch-sized key set broadcasts via AQE
+    * at runtime; a bulk backfill degrades to a shuffle join instead of
+    * a driver OOM. `current` must be a direct file scan. */
   private[graft] def affectedFileProbe(current: DataFrame, matchKeys: DataFrame,
-                                       keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.input_file_name
-    current.withColumn("__file", input_file_name())
-      .join(matchKeys, keys, "left_semi")
-      .select("__file").distinct()
+                                       keys: Seq[String]): DataFrame =
+    matchedRows(current.withColumn(DvFileCol, col("_metadata.file_path")),
+      matchKeys, keys).select(DvFileCol).distinct()
+
+  /** The target rows whose key some `matchKeys` row carries. */
+  private def matchedRows(target: DataFrame, matchKeys: DataFrame,
+                          keys: Seq[String]): DataFrame =
+    target.join(matchKeys, keys, "left_semi")
+
+  /** `scan` limited to a key range's per-column [min, max] (the
+    * predicate pushes to parquet's row-group stats); unlimited for
+    * None. */
+  private def inRange(scan: DataFrame, range: Option[org.apache.spark.sql.Row],
+                      keys: Seq[String]): DataFrame =
+    range.fold(scan) { r =>
+      import org.apache.spark.sql.functions.lit
+      scan.where(keys.zipWithIndex.map { case (k, i) =>
+        col(k) >= lit(r.get(2 * i)) && col(k) <= lit(r.get(2 * i + 1))
+      }.reduce(_ && _))
+    }
+
+  /** `scan` (a direct file scan: `_metadata` exists only there) with
+    * each row's file in [[DvFileCol]] and position in [[DvPosCol]],
+    * less the rows an earlier deletion vector in `dvDirs` deleted. */
+  private def livePositions(spark: org.apache.spark.sql.SparkSession,
+                            scan: DataFrame, dvDirs: Seq[String]): DataFrame = {
+    val withPos = scan
+      .withColumn(DvFileCol, col("_metadata.file_path"))
+      .withColumn(DvPosCol, col("_metadata.row_index"))
+    if (dvDirs.isEmpty) withPos
+    else withPos.join(
+      spark.read.schema(DvSchema).parquet(dvDirs: _*).select(DvFileCol, DvPosCol),
+      Seq(DvFileCol, DvPosCol), "left_anti")
   }
 
-  /** The matched keys' per-column [min, max] as one tiny agg job;
-    * None when the key set is empty or carries nulls (no pruning). */
+  /** The keys' per-column [min, max] as one tiny agg job; None when
+    * the key set is empty or carries only nulls (no pruning). */
   private[graft] def keyRange(matchKeys: DataFrame, keys: Seq[String])
     : Option[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions.{max, min}

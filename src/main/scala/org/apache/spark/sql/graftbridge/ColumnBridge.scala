@@ -60,3 +60,25 @@ object PlanBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 }
+
+/** Parquet footer → Catalyst schema the way Spark's own schema
+  * inference converts the one footer it reads: the Spark row metadata
+  * the writer stored, else the parquet types under the session's
+  * conversion settings — then every field nullable, as file sources
+  * always read. `readSchemaFromFooter` is private[parquet] in spirit
+  * and `asNullable` private[spark]; a driver-side reader that must
+  * match `spark.read.parquet(dir).schema` without its Spark job needs
+  * exactly these two steps. */
+object FooterBridge {
+  def schemaOf(spark: org.apache.spark.sql.SparkSession,
+               path: org.apache.hadoop.fs.Path,
+               footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(path, footer),
+      new ParquetToSparkSchemaConverter(conf)).asNullable
+  }
+}

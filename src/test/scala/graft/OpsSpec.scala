@@ -129,6 +129,30 @@ class OpsSpec extends SparkSuite {
     assert(partial.getMessage.contains("unprocessed rows beyond watermark"))
   }
 
+  test("CDC loop: the first-iteration probe reads at most one row group") {
+    // four files of 100 ids, one row group each: the existence probe
+    // stops at the first row instead of sorting or scanning the source
+    val tmp = java.nio.file.Files.createTempDirectory("cdc_probe_").toString
+    (1L to 400L).map(i => (i, i * 2)).toDF("id", "v")
+      .repartitionByRange(4, $"id").write.parquet(s"$tmp/src")
+    val src = spark.read.parquet(s"$tmp/src")
+    val store = new Cdc.WatermarkStore(spark, s"$tmp/wm")
+    val (n, scans) = PlanScans.during(spark) {
+      Cdc.runLoop(src, "id", "t", store, batchSize = 150, df => df,
+        (b, wm) => b.write.mode("overwrite").parquet(s"$tmp/out/batch=$wm"))
+    }
+    assert(n == 3)
+    val probe = scans.filter(_.action == "head")
+    assert(probe.size == 1 && probe.head.rows <= 100, s"probe scans: $probe")
+    // resume against the drained source: the probe finds nothing and
+    // the sink is never called
+    val (again, resumed) = PlanScans.during(spark) {
+      Cdc.runLoop(src, "id", "t", store, 150, df => df, (_, _) => fail())
+    }
+    assert(again == 0)
+    assert(resumed.filter(_.action == "head").map(_.rows).sum == 0)
+  }
+
   test("Orchestrator.runConcurrent: waves run parallel, results deterministic") {
     import Orchestrator.Pipeline
     val tmp = java.nio.file.Files.createTempDirectory("orch_par_").toString

@@ -339,6 +339,128 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  test("SQL MERGE == the per-arm target-join oracle on random tables and sources") {
+    import graft.plans.{GraftSql, GraftSqlTables}
+    import graft.sources.{Sinks, TxnManifest}
+    import org.apache.spark.sql.DataFrame
+    // (clauses, delete condition, update arm, insert condition) over
+    // source `c`: the benchmark's statement, a conditional INSERT with
+    // no delete, and a delete-only merge
+    val variants = Seq(
+      ("""WHEN MATCHED AND c.op = 'D' THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED AND c.op <> 'D' THEN INSERT *""".stripMargin,
+        Some(col("op") === "D"), true, Some(col("op") =!= "D")),
+      ("""WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED AND c.op = 'I' THEN INSERT *""".stripMargin,
+        None, true, Some(col("op") === "I")),
+      ("WHEN MATCHED AND c.op = 'D' THEN DELETE", Some(col("op") === "D"),
+        false, None))
+    // the reference semantics, one arm at a time with semi and anti
+    // joins against the target's keys: a key any matched source row
+    // deletes updates none of its rows; updates and inserts must be
+    // unique per key (NULL keys group together)
+    def oracle(tgt: DataFrame, src: DataFrame, del: Option[org.apache.spark.sql.Column],
+               update: Boolean, ins: Option[org.apache.spark.sql.Column]) = {
+      val tgtKeys = tgt.select("id").distinct()
+      val mDel = del.map(c => src.where(c).select("id")
+        .join(tgtKeys, Seq("id"), "left_semi"))
+      val upd = if (!update) None else Some(mDel.fold(src)(d =>
+        src.join(d, Seq("id"), "left_anti"))
+        .join(tgtKeys, Seq("id"), "left_semi").select("id", "v"))
+      val inserts = ins.map(c => src.where(coalesce(c, lit(false)))
+        .join(tgtKeys, Seq("id"), "left_anti").select("id", "v"))
+      val ups = (upd.toSeq ++ inserts).reduceOption(_.union(_))
+      val raises = ups.exists(_.groupBy("id").count().where($"count" > 1)
+        .limit(1).collect().nonEmpty)
+      val gone = (mDel.toSeq ++ upd.map(_.select("id")))
+        .reduceOption(_.union(_))
+      val table = (gone.fold(tgt)(g => tgt.join(g, Seq("id"), "left_anti")) +:
+        ups.toSeq).reduce(_.union(_))
+      val changes = Seq(
+        upd.map(u => tgt.join(u.select("id"), Seq("id"), "left_semi")
+          .withColumn("ct", lit("update_preimage"))),
+        upd.map(_.withColumn("ct", lit("update_postimage"))),
+        inserts.map(_.withColumn("ct", lit("insert"))),
+        mDel.map(d => tgt.join(d, Seq("id"), "left_semi")
+          .withColumn("ct", lit("delete")))).flatten.reduce(_.union(_))
+      (raises, table, changes)
+    }
+    def rowsOf(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val mixes = Seq(Seq("U", "D", "I"), Seq("D"), Seq("I"))
+    val cases = Gen.listOfN(5, for {
+      n      <- Gen.chooseNum(5, 120)
+      splits <- Gen.chooseNum(1, 4)
+      dv     <- Gen.listOf(Gen.chooseNum(0L, 120L))
+      mix    <- Gen.oneOf(mixes)
+      src    <- Gen.listOf(Gen.zip(
+        Gen.frequency(1 -> Gen.const(Option.empty[Long]),
+          12 -> Gen.chooseNum(-5L, 130L).map(Option(_))),
+        Gen.oneOf(mix), Gen.alphaNumStr.map(_.take(3))))
+    } yield (n, splits, dv, src)).sample.get
+    // a hand-made case pins the delete rule: two matched source rows
+    // update and delete key 1 — the delete wins, no update lands (and
+    // without a delete clause the same rows are a duplicate update)
+    val pinned = (3, 1, List.empty[Long], List[(Option[Long], String, String)](
+      (Some(1L), "U", "u1"), (Some(1L), "D", "d1"), (Some(0L), "U", "u0")))
+    var scanChecks = 0
+    for (((n, splits, dv, srcRows), ci) <- (pinned +: cases).zipWithIndex;
+         ((clauses, del, update, ins), vi) <- variants.zipWithIndex) {
+      val tmp = java.nio.file.Files.createTempDirectory(s"mergeprop_${ci}_$vi")
+        .toString
+      val root = s"$tmp/t"
+      val man = new TxnManifest(s"$tmp/_commits")
+      for (b <- 0 until splits) {
+        Sinks.appendBatch((0 until n).filter(_ % splits == b)
+          .map(i => (i.toLong, s"v$i")).toDF("id", "v"), root, b)
+        man.commit(b, Seq(s"$root/batch=$b"))
+      }
+      // some targets carry deletion vectors over their dirs
+      if (dv.nonEmpty)
+        Sinks.mergeDeleteDV(spark, dv.toDF("id"), root, man, Seq("id"), splits)
+      val name = s"mprop_${ci}_$vi"
+      GraftSqlTables.register(name,
+        GraftSqlTables.Entry(root, man.path, keys = Seq("id"), cdf = true))
+      srcRows.toDF("id", "op", "v").select("id", "v", "op")
+        .createOrReplaceTempView("mprop_src")
+      val before = Sinks.readCommitted(spark, root, man).select("id", "v")
+      val want = rowsOf(before)
+      val mergeId = man.committed().keySet.max + 1
+      val (raises, table, changes) = oracle(before, spark.table("mprop_src"),
+        del, update, ins)
+      val (wantTable, wantChanges) = (rowsOf(table), rowsOf(changes))
+      val (outcome, scans) = PlanScans.during(spark)(scala.util.Try(
+        GraftSql.execute(spark,
+          s"MERGE INTO $name AS t USING mprop_src AS c ON t.id = c.id\n$clauses")))
+      val at = s"case $ci variant $vi"
+      assert(outcome.isFailure == raises, s"$at: raised ${outcome.failed.toOption}")
+      outcome.failed.foreach { e =>
+        assert(e.isInstanceOf[IllegalArgumentException], s"$at: $e")
+        assert(rowsOf(Sinks.readCommitted(spark, root, man).select("id", "v")) ==
+          want, s"$at: a failed merge changed the table")
+      }
+      if (outcome.isSuccess) {
+        assert(rowsOf(Sinks.readCommitted(spark, root, man)
+          .select("id", "v")) == wantTable, s"$at: table")
+        assert(rowsOf(GraftSql.execute(spark,
+          s"SELECT id, v, _change_type FROM table_changes('$name', $mergeId)"))
+          == wantChanges, s"$at: change feed")
+        // the fast path reads the target twice: pass 1 and the rewrite
+        if (vi == 0) {
+          val reads = scans.count(_.paths.exists(_.startsWith(s"$root/batch=")))
+          assert(reads <= 2, s"$at: $reads target scans: $scans")
+          scanChecks += 1
+        }
+      }
+      if (ci == 0 && vi == 0)
+        assert(wantTable == Seq("0|u0", "2|v2") && outcome.isSuccess,
+          s"$at: the delete rule")
+      GraftSqlTables.unregister(name)
+    }
+    assert(scanChecks > 0)
+  }
+
   test("exact z-split write: rows preserved, files bounded, key ranges disjoint") {
     import graft.sources.Layout
     // shapes the cube test never exercises: negative keys (1-column

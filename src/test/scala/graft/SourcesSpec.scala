@@ -1086,4 +1086,78 @@ class SourcesSpec extends SparkSuite {
     assert(WarcFetch.fetch(
       pcdx.select($"file", $"offset", $"length").distinct()).count() == 6)
   }
+
+  test("dirSchema: driver-side footer schema == Spark's inference, with no job") {
+    val tmp = java.nio.file.Files.createTempDirectory("dir_schema_").toString
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("amount", DecimalType(12, 2)),
+      StructField("big", DecimalType(30, 4), nullable = false),
+      StructField("name", StringType),
+      StructField("day", DateType),
+      StructField("at", TimestampType, nullable = false),
+      StructField("tags", ArrayType(IntegerType, containsNull = false)),
+      StructField("attrs", MapType(StringType, DoubleType)),
+      StructField("inner", StructType(Seq(
+        StructField("a", IntegerType, nullable = false),
+        StructField("b", StringType))))))
+    val rows = Seq(
+      org.apache.spark.sql.Row(1L, BigDecimal("1.50").bigDecimal,
+        BigDecimal("123456789.1234").bigDecimal, "x",
+        java.sql.Date.valueOf("2025-01-02"),
+        java.sql.Timestamp.valueOf("2025-01-02 03:04:05"), Seq(1, 2),
+        Map("k" -> 1.0), org.apache.spark.sql.Row(7, "y")),
+      org.apache.spark.sql.Row(2L, null, BigDecimal("0").bigDecimal, null, null,
+        java.sql.Timestamp.valueOf("2025-02-03 00:00:00"), null, null, null))
+    val dirs = (0 until 2).map { b =>
+      Sinks.appendBatch(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), schema), s"$tmp/t", b)
+      s"$tmp/t/batch=$b"
+    }
+    // cold: neither dir's schema is memoized yet, and building the
+    // frame starts no Spark job
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graftbridge.TestConfBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val read =
+      try {
+        val df = Sinks.readDirs(spark, dirs, None)
+        org.apache.spark.graftbridge.TestConfBridge.drainListenerBus(spark.sparkContext)
+        df
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs for a cold readDirs")
+    dirs.foreach(d => assert(Sinks.dirSchema(spark, d).contains(
+      spark.read.parquet(d).schema), d))
+    assert(read.schema == spark.read.parquet(dirs: _*).schema)
+    assert(read.count() == 4)
+  }
+
+  test("mergedSchemaOpt: an evolved table still reads its merged schema") {
+    import graft.sources.GraftManifestSource
+    val tmp = java.nio.file.Files.createTempDirectory("merged_schema_").toString
+    val root = s"$tmp/t"
+    val man = new TxnManifest(s"$tmp/_commits")
+    Sinks.appendBatch(Seq((1L, "a")).toDF("id", "v"), root, 0)
+    man.commit(0, Seq(s"$root/batch=0"))
+    Sinks.appendBatch(Seq((2L, "b", 2.5)).toDF("id", "v", "extra"), root, 1)
+    man.commit(1, Seq(s"$root/batch=1"))
+    val merged = spark.read.option("mergeSchema", true)
+      .parquet(s"$root/batch=0", s"$root/batch=1").schema
+    assert(GraftManifestSource.mergedSchemaOpt(spark, root, man.path)
+      .contains(merged))
+    assert(merged.fieldNames.toSeq == Seq("id", "v", "extra"))
+    // the change feed serves the merged data columns plus its two
+    val feed = spark.read.format("graft-manifest")
+      .option("manifest", man.path).option("changeFeed", "true").load(root)
+    assert(feed.columns.toSeq ==
+      Seq("id", "v", "extra", Sinks.ChangeTypeCol, "_commit_batch"))
+    assert(feed.where($"id" === 1L).select("extra").head().isNullAt(0))
+  }
 }
+

@@ -14,4 +14,9 @@ object TestConfBridge {
   def remove(sc: SparkContext, key: String): Unit = {
     sc.conf.remove(key); ()
   }
+  /** Block until every event posted so far reached its listeners
+    * (`listenerBus` is private[spark]) — how a test reads a listener's
+    * counts without sleeping. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
