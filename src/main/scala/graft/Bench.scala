@@ -1,24 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // cached plans keep AQE partition coalescing (default false
-      // keeps a cache's partitioning stable for positional reuse,
-      // which nothing here relies on): without it every persisted
-      // batch-sized frame materializes at full shuffle-partition
-      // count and every consumer pays a tiny-task storm; with it the
-      // cache takes AQE's advisory-size output at any scale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // session warmup so the first timed query doesn't absorb JVM /
     // codegen / scheduler startup

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev helper: time a single SparkEntry query (two passes — cold,
   * then warm) without running the whole bench suite.
@@ -12,21 +11,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val name  = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // cached plans keep AQE partition coalescing (default false
-      // keeps a cache's partitioning stable for positional reuse,
-      // which nothing here relies on): without it every persisted
-      // batch-sized frame materializes at full shuffle-partition
-      // count and every consumer pays a tiny-task storm; with it the
-      // cache takes AQE's advisory-size output at any scale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
+    val b0 = GraftSession.local()
     // dev A/B knob: SPARK_GRAFT_EXTRA_CONFS="k=v;k=v" to test a config
     // hypothesis on one query without touching the bench contract
     val b = sys.env.get("SPARK_GRAFT_EXTRA_CONFS").fold(b0) { s =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -14,22 +13,7 @@ object ProfileOne {
   def main(args: Array[String]): Unit = {
     val name  = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // cached plans keep AQE partition coalescing (default false
-      // keeps a cache's partitioning stable for positional reuse,
-      // which nothing here relies on): without it every persisted
-      // batch-sized frame materializes at full shuffle-partition
-      // count and every consumer pays a tiny-task storm; with it the
-      // cache takes AQE's advisory-size output at any scale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
 
@@ -76,7 +60,7 @@ object ProfileOne {
     val n = SparkEntry.queries(name)(spark, sfDir).count()
     graft.util.CacheScope.releaseAll()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500) // let the listener bus drain
+    org.apache.spark.sql.graftbridge.ListenerBridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
 
     def mb(b: Long) = f"${b / 1024.0 / 1024.0}%8.1f"

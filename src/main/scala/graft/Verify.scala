@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,32 +11,17 @@ object Verify {
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(',').map(_.trim).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // pandas `errors='coerce'` / lenient-cast parity (SURVEY.md §2.7 C7):
-      // invalid casts yield NULL, not errors. Oracle SQL uses TRY_CAST
-      // to express the same semantics on the DuckDB side.
-      .config("spark.sql.ansi.enabled", "false")
-      // cached plans keep AQE partition coalescing (default false
-      // keeps a cache's partitioning stable for positional reuse,
-      // which nothing here relies on): without it every persisted
-      // batch-sized frame materializes at full shuffle-partition
-      // count and every consumer pays a tiny-task storm; with it the
-      // cache takes AQE's advisory-size output at any scale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch {
+        // NonFatal only: an OOM or a dying JVM must stop the dump, not
+        // be logged and carried into every later query
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // operator-internal caches are query-scoped (see CacheScope)
       graft.util.CacheScope.releaseAll()

@@ -3,8 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.text.DedupIndex
-import graft.util.AtomicText
+import graft.util.IndexTables
 
 /** Incremental perceptual-hash near-dup detection against a PERSISTED
   * band index — [[graft.text.DedupIndex]]'s operational shape
@@ -24,53 +23,27 @@ import graft.util.AtomicText
   *   - hashes `(id, hi, lo) PARTITIONED BY (batch) CLUSTERED BY (id)`
   *     — full 64-bit hashes for the exact bit_count(xor) verify.
   *
-  * Band geometry is an INDEX-CREATION parameter, persisted in
-  * `<dir>/_geometry.tsv` and enforced on every ingest: stored bands
-  * are only probe-able by identically-banded keys, so a
-  * corpus-derived width (the [[graft.sim.HammingBands]] occupancy
-  * rule over the EXPECTED corpus size) must be chosen when the index
-  * is created, not re-derived per batch — re-deriving would silently
-  * partition history into incompatible band spaces.
+  * Band geometry is an INDEX-CREATION parameter, pinned in
+  * `<dir>/_geometry.tsv` ([[graft.util.IndexTables.pinGeometry]]) and
+  * enforced on every ingest: stored bands are only probe-able by
+  * identically-banded keys, so a corpus-derived width (the
+  * [[graft.sim.HammingBands]] occupancy rule over the EXPECTED corpus
+  * size) must be chosen when the index is created, not re-derived per
+  * batch — re-deriving would silently partition history into
+  * incompatible band spaces.
   *
-  * The hashes and bands writes OVERLAP (guide §2.6 — round 17):
-  * [[storedView]] reads only batches present in BOTH tables, so a
-  * crash between the writes leaves either orphan direction INERT —
-  * the torn batch is invisible (as if never ingested) until its
-  * retry overwrites both partitions (the ClusterIndex/SpanIndex
-  * both-present discipline, replacing the ordered
-  * hashes-before-bands contract). The video grain
-  * ([[ingestVideoBatch]] / [[storedVideoView]]) follows the same
-  * discipline.
+  * The hashes and bands writes OVERLAP; [[graft.util.IndexTables]]
+  * reads only batches present in BOTH tables, so a torn batch is
+  * invisible until its retry. The video grain ([[ingestVideoBatch]],
+  * tables vframes/vbands) follows the same discipline.
   */
 object PhashIndex {
 
-  private def tableNames(indexDir: String): (String, String) = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(indexDir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(12)
-    (s"graft_phidx_bands_$tag", s"graft_phidx_hashes_$tag")
-  }
+  private[graft] def tables(indexDir: String) = new IndexTables(indexDir, "phidx",
+    Seq("hashes" -> Seq("id"), "bands" -> Seq("bi", "bv")))
 
-  private def geometryPath(indexDir: String) = s"$indexDir/_geometry.tsv"
-
-  /** Persist the index's band width on first ingest; refuse a
-    * mismatched width afterwards (stored bands keyed under a
-    * different split are unreachable, which reads as silent recall
-    * loss, not an error — so make it an error). */
-  private def pinGeometry(indexDir: String, bandBits: Int): Unit = {
-    AtomicText.readLines(geometryPath(indexDir)) match {
-      case Seq() =>
-        AtomicText.writeAtomically(geometryPath(indexDir),
-          s"bandBits\t$bandBits\n")
-      case lines =>
-        val stored = lines.collectFirst {
-          case l if l.startsWith("bandBits\t") => l.drop(9).trim.toInt }
-        require(stored.contains(bandBits),
-          s"phash index $indexDir was created with bandBits=" +
-            s"${stored.getOrElse("?")}; this ingest asked for $bandBits — " +
-            "stored bands would be unreachable under a different split")
-    }
-  }
+  private[graft] def videoTables(indexDir: String) = new IndexTables(indexDir, "phidx",
+    Seq("vframes" -> Seq("id"), "vbands" -> Seq("bi", "bv")))
 
   /** Ingest one batch of 64-bit hashes (`id`, `hi`, `lo` — the hash's
     * 32-bit halves as longs, the mm6/mm7/mm8 output shape): returns
@@ -83,7 +56,8 @@ object PhashIndex {
                   bandBits: Int, hammingMax: Int = 8,
                   buckets: Int = 4): DataFrame = {
     val spark = hashes.sparkSession
-    pinGeometry(indexDir, bandBits)
+    val ix = tables(indexDir)
+    ix.pinGeometry("phash", "bandBits" -> bandBits)
     val bspec = graft.sim.HammingBands.spec(bandBits)
     val newHashes = graft.util.CacheScope.track(
       hashes.select(col("id"), col("hi").cast("long").as("hi"),
@@ -98,16 +72,8 @@ object PhashIndex {
         }: _*)).as("b"))
         .select(col("id"), col("b.bi").as("bi"), col("b.bv").as("bv")))
 
-    // restart recovery BEFORE the probe (the DedupIndex catalog-loss
-    // argument); all are no-ops when tables exist or nothing survived
-    val (bandsT, hashesT) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, hashPair(indexDir))
-    DedupIndex.ensureTable(spark, newHashes, hashesT, s"$indexDir/hashes",
-      Seq("id"), buckets)
-    DedupIndex.ensureTable(spark, newBands, bandsT, s"$indexDir/bands",
-      Seq("bi", "bv"), buckets)
-
-    val stored = storedView(spark, indexDir, excludeBatch = batchId)
+    val stored = ix.open(spark, buckets, batchId,
+      "hashes" -> newHashes, "bands" -> newBands)
 
     // candidates = (new ⋈ new) ∪ (new ⋈ stored) band collisions — two
     // joins, never one join against a union (a union would discard
@@ -121,7 +87,7 @@ object PhashIndex {
         .select(least(col("x"), col("y")).as("id1"),
           greatest(col("x"), col("y")).as("id2"))
     val cand = stored
-      .map(s => collisions(newBands).unionAll(collisions(s._1)))
+      .map(s => collisions(newBands).unionAll(collisions(s("bands"))))
       .getOrElse(collisions(newBands))
       .distinct()
 
@@ -141,9 +107,9 @@ object PhashIndex {
         col("hi").as(s"__nh_$tag"), col("lo").as(s"__nl_$tag"))
       val withNew = p.join(fresh, Seq(side), "left")
       stored match {
-        case Some((_, sh)) =>
+        case Some(st) =>
           withNew
-            .join(sh.select(col("id").as(side), col("hi").as(s"__sh_$tag"),
+            .join(st("hashes").select(col("id").as(side), col("hi").as(s"__sh_$tag"),
               col("lo").as(s"__sl_$tag")), Seq(side), "left")
             .withColumn(s"hi$tag",
               coalesce(col(s"__nh_$tag"), col(s"__sh_$tag")))
@@ -164,23 +130,13 @@ object PhashIndex {
       .select(col("id1"), col("id2"), col("hamming"))
 
     // append AFTER the probe plans are built; overlapped writes
-    // (guide §2.6): reads gate on a batch being present in BOTH
-    // tables (class doc), so a torn pair is inert whichever side
-    // lands first; both inputs are CacheScope-pinned
+    // (guide §2.6): a torn pair is inert whichever side lands first
+    // (class doc); both inputs are CacheScope-pinned
     val out = verified.localCheckpoint()
     graft.util.Par.both(
-      DedupIndex.writeIndexed(spark, newHashes, hashesT,
-        s"$indexDir/hashes", Seq("id"), buckets, batchId),
-      DedupIndex.writeIndexed(spark, newBands, bandsT, s"$indexDir/bands",
-        Seq("bi", "bv"), buckets, batchId))
+      ix.write(spark, "hashes", newHashes, buckets, batchId),
+      ix.write(spark, "bands", newBands, buckets, batchId))
     out
-  }
-
-  private def vTableNames(indexDir: String): (String, String) = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(indexDir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(12)
-    (s"graft_phidx_vbands_$tag", s"graft_phidx_vframes_$tag")
   }
 
   /** Ingest one batch of VIDEOS as per-frame hashes (`id`,
@@ -201,7 +157,8 @@ object PhashIndex {
                        bandBits: Int, hammingMax: Int = 8, tol: Int = 1,
                        buckets: Int = 4): DataFrame = {
     val spark = frames.sparkSession
-    pinGeometry(indexDir, bandBits)
+    val ix = videoTables(indexDir)
+    ix.pinGeometry("phash", "bandBits" -> bandBits)
     val bspec = graft.sim.HammingBands.spec(bandBits)
     val newH = graft.util.CacheScope.track(
       frames.select(col("id"), col("frame_idx").cast("int").as("fi"),
@@ -216,13 +173,8 @@ object PhashIndex {
         }: _*)).as("b"))
         .select(col("id"), col("fi"), col("b.bi").as("bi"),
           col("b.bv").as("bv")))
-    val (bandsT, framesT) = vTableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, videoPair(indexDir))
-    DedupIndex.ensureTable(spark, newH, framesT, s"$indexDir/vframes",
-      Seq("id"), buckets)
-    DedupIndex.ensureTable(spark, newB, bandsT, s"$indexDir/vbands",
-      Seq("bi", "bv"), buckets)
-    val stored = storedVideoView(spark, indexDir, excludeBatch = batchId)
+    val stored = ix.open(spark, buckets, batchId,
+      "vframes" -> newH, "vbands" -> newB)
 
     // a band collision at (fa, fb) PROPOSES off = f(id1) − f(id2)
     val newProbe = newB.select(col("bi"), col("bv"),
@@ -237,7 +189,7 @@ object PhashIndex {
           when(col("xa") < col("yb"), col("fa") - col("fb"))
             .otherwise(col("fb") - col("fa")).cast("long").as("off"))
     val cand = stored
-      .map(s => collisions(newB).unionAll(collisions(s._1)))
+      .map(s => collisions(newB).unionAll(collisions(s("vbands"))))
       .getOrElse(collisions(newB))
       .distinct()
       .localCheckpoint() // candidate ids below + the verify read it
@@ -250,19 +202,16 @@ object PhashIndex {
     // makes it large — the stored frame table stays bucket-local on
     // `id` either way (ScaleSpec pin)
     val lookup = stored match {
-      case Some((_, sh)) => newH.unionAll(
-        sh.join(candIds, Seq("id"), "left_semi"))
+      case Some(st) => newH.unionAll(st("vframes").drop("batch")
+        .join(candIds, Seq("id"), "left_semi"))
       case None => newH
     }
-    // overlapped writes (guide §2.6): reads gate on a batch being
-    // present in BOTH tables (class doc), so a torn pair is inert
-    // whichever side lands first; both inputs are CacheScope-pinned
+    // overlapped writes (guide §2.6): a torn pair is inert whichever
+    // side lands first (class doc); both inputs are CacheScope-pinned
     val out = offsetVerdict(cand, lookup, hammingMax, tol).localCheckpoint()
     graft.util.Par.both(
-      DedupIndex.writeIndexed(spark, newH, framesT, s"$indexDir/vframes",
-        Seq("id"), buckets, batchId),
-      DedupIndex.writeIndexed(spark, newB, bandsT, s"$indexDir/vbands",
-        Seq("bi", "bv"), buckets, batchId))
+      ix.write(spark, "vframes", newH, buckets, batchId),
+      ix.write(spark, "vbands", newB, buckets, batchId))
     out
   }
 
@@ -308,90 +257,26 @@ object PhashIndex {
         col("max_ham"))
   }
 
-  private def hashPair(indexDir: String): DedupIndex.PairSpec = {
-    val (bandsT, hashesT) = tableNames(indexDir)
-    DedupIndex.PairSpec(bandsT, "bands", Seq("bi", "bv"),
-      hashesT, "hashes", Seq("id"))
-  }
-
-  private def videoPair(indexDir: String): DedupIndex.PairSpec = {
-    val (vbandsT, vframesT) = vTableNames(indexDir)
-    DedupIndex.PairSpec(vbandsT, "vbands", Seq("bi", "bv"),
-      vframesT, "vframes", Seq("id"))
-  }
-
-  /** OPTIMIZE: fold every batch partition of this index (hash grain
-    * AND, if present, video sequence grain) into one generation
-    * partition each — [[DedupIndex.compact]]'s marker-protocol
-    * rewrite applied to the phash table pairs. Probe results are
+  /** OPTIMIZE: fold every complete batch of the hash grain AND, if
+    * present, the video grain into one generation partition each
+    * ([[graft.util.IndexTables]] OPTIMIZE). Probe results are
     * invariant (IndexSpec pins it) and the stored-side no-shuffle
     * property survives: the generation partition is written through
     * the same bucketed tables. Returns true when anything folded. */
   def compact(spark: SparkSession, indexDir: String,
               buckets: Int = 4): Boolean = {
-    val a = DedupIndex.compactPair(spark, indexDir, hashPair(indexDir), buckets)
-    val b = DedupIndex.compactPair(spark, indexDir, videoPair(indexDir), buckets)
+    val a = tables(indexDir).compact(spark, buckets)
+    val b = videoTables(indexDir).compact(spark, buckets)
     a || b
   }
 
-  /** Drop this index's session-catalog tables (image/audio AND video
-    * grain) and delete its data directory — for SCRATCH indexes whose
-    * lifetime is one query (dd18/dd21 register this as a
+  /** Drop this index's tables (both grains) and data — for SCRATCH
+    * indexes whose lifetime is one query (dd18/dd21 register this as a
     * [[graft.util.CacheScope]] release hook so repeated bench passes
     * don't accumulate dead band tables in /tmp + the catalog). A
     * persistent production index never calls this. */
   def dropIndex(spark: SparkSession, indexDir: String): Unit = {
-    val (b, h) = tableNames(indexDir)
-    val (vb, vf) = vTableNames(indexDir)
-    Seq(b, h, vb, vf).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
-
-  /** Frame-index twin of [[storedView]]: (bands, frames) minus
-    * `excludeBatch`, torn-batch guarded. */
-  private[graft] def storedVideoView(spark: SparkSession, indexDir: String,
-                                     excludeBatch: Int)
-    : Option[(DataFrame, DataFrame)] = {
-    val (bandsT, framesT) = vTableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, videoPair(indexDir))
-    if (!spark.catalog.tableExists(bandsT)) None
-    else {
-      val live = (DedupIndex.fsBatches(spark, s"$indexDir/vbands")
-        intersect DedupIndex.fsBatches(spark, s"$indexDir/vframes")) -
-        excludeBatch
-      if (live.isEmpty) None
-      else Some((
-        spark.table(bandsT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("id", "fi", "bi", "bv"),
-        spark.table(framesT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("id", "fi", "hi", "lo")))
-    }
-  }
-
-  /** (bands, hashes) as currently committed — minus `excludeBatch` —
-    * or None before the first complete batch. Only batches present
-    * in BOTH tables are read (class doc): a torn ingest (either
-    * orphan direction) is invisible until its retry lands both
-    * partitions. */
-  private[graft] def storedView(spark: SparkSession, indexDir: String,
-                                excludeBatch: Int)
-    : Option[(DataFrame, DataFrame)] = {
-    val (bandsT, hashesT) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, hashPair(indexDir))
-    if (!spark.catalog.tableExists(bandsT)) None
-    else {
-      val live = (DedupIndex.fsBatches(spark, s"$indexDir/bands")
-        intersect DedupIndex.fsBatches(spark, s"$indexDir/hashes")) -
-        excludeBatch
-      if (live.isEmpty) None
-      else Some((
-        spark.table(bandsT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("id", "bi", "bv"),
-        spark.table(hashesT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("id", "hi", "lo")))
-    }
+    tables(indexDir).dropIndex(spark)
+    videoTables(indexDir).dropIndex(spark)
   }
 }

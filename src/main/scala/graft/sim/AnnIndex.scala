@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.text.DedupIndex
-import graft.util.AtomicText
+import graft.util.{AtomicText, IndexTables}
 
 /** Persisted IVF-PQ index — [[Embeddings.ivfPqTopK]]'s operational
   * form, the same move the dedup family makes for bands and anchors:
@@ -43,40 +42,29 @@ import graft.util.AtomicText
   */
 object AnnIndex {
 
-  private def tag(indexDir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(indexDir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(12)
-
-  private[graft] def tableName(indexDir: String): String =
-    s"graft_annidx_codes_${tag(indexDir)}"
-
-  /** The RETRAIN RESERVOIR (round 16): quantized vectors, id-bucketed,
-    * written BEFORE codes each ingest (codes last = the
-    * source-of-truth batch list, the torn invariant's write order).
-    * COLD storage — queries never touch it (the codes table is the
-    * memory-resident probe side, PQ's whole point); only
+  /** Two tables in write order: the RETRAIN RESERVOIR (round 16) of
+    * quantized vectors, id-bucketed, then the codes — the probe table,
+    * written last, so its batches are the source-of-truth list. The
+    * reservoir is COLD storage — queries never touch it (the codes
+    * table is the memory-resident probe side, PQ's whole point); only
     * [[retrain]] scans it. FAISS users keep original vectors for
     * exactly this — a codebook is re-trainable only from vectors,
     * never from its own lossy codes. */
-  private[graft] def vecsTable(indexDir: String): String =
-    s"graft_annidx_vecs_${tag(indexDir)}"
+  private[graft] def tables(indexDir: String) = new IndexTables(indexDir, "annidx",
+    Seq("vecs" -> Seq("id"), "codes" -> Seq("cl")))
 
   private def geometryPath(indexDir: String) = s"$indexDir/_geometry.tsv"
+  private def retrainMarker(indexDir: String) = s"$indexDir/_retrain.tsv"
 
-  private def codesSpec(indexDir: String): Seq[DedupIndex.TableSpec] =
-    Seq(DedupIndex.TableSpec(vecsTable(indexDir), "vecs", Seq("id")),
-      DedupIndex.TableSpec(tableName(indexDir), "codes", Seq("cl")))
-
-  /** OPTIMIZE: fold the batch partitions of the codes table into one
-    * generation ([[DedupIndex.compactSpecs]]'s marker protocol on the
-    * single-table spec) — daily ingestion otherwise leaves one
-    * partition per batch forever, every probe scanning all of them.
-    * Folding a batch ends its retry window, as across the family. */
+  /** OPTIMIZE: fold the batch partitions into one generation
+    * ([[graft.util.IndexTables]] OPTIMIZE) — daily ingestion otherwise
+    * leaves one partition per batch forever, every probe scanning all
+    * of them. Folding a batch ends its retry window, as across the
+    * family. */
   def compact(spark: SparkSession, indexDir: String,
               buckets: Int = 4): Boolean = {
     recoverRetrain(spark, indexDir)
-    DedupIndex.compactSpecs(spark, indexDir, codesSpec(indexDir), buckets)
+    tables(indexDir).compact(spark, buckets)
   }
 
   final case class Geometry(m: Int, subDim: Int, nTrain: Int,
@@ -167,11 +155,11 @@ object AnnIndex {
         Embeddings.pqSubs(q, g.m, g.subDim), codebookDf(spark, g))
       .join(q.select(col("id"), col("cl")), Seq("id"))
       .select(col("id"), col("cl"), col("j"), col("code"))
-    DedupIndex.recoverSpecs(spark, indexDir, codesSpec(indexDir))
-    DedupIndex.writeIndexed(spark, q.select(col("id"), col("cl"), col("v")),
-      vecsTable(indexDir), s"$indexDir/vecs", Seq("id"), buckets, batchId)
-    DedupIndex.writeIndexed(spark, codes, tableName(indexDir),
-      s"$indexDir/codes", Seq("cl"), buckets, batchId)
+    val ix = tables(indexDir)
+    ix.recover(spark)
+    ix.write(spark, "vecs", q.select(col("id"), col("cl"), col("v")),
+      buckets, batchId)
+    ix.write(spark, "codes", codes, buckets, batchId)
   }
 
   // ------------------------------------------------ OPTIMIZE RETRAIN
@@ -185,7 +173,7 @@ object AnnIndex {
     * schedule for exactly this. Hyper-parameters (m, subDim, nTrain)
     * are kept; the VALUES re-learn from the vecs reservoir.
     *
-    * Protocol (the compactSpecs marker shape, plus a geometry swap
+    * Protocol ([[graft.util.IndexTables.fold]], plus a geometry swap
     * state): stage the new geometry INSIDE the marker, fold vecs to
     * the generation partition, re-encode codes FROM the folded vecs
     * under the new codebook (probe table written last), mark
@@ -203,94 +191,51 @@ object AnnIndex {
   def retrain(spark: SparkSession, indexDir: String,
               buckets: Int = 4): Boolean = {
     recoverRetrain(spark, indexDir)
-    val specList = codesSpec(indexDir)
-    DedupIndex.recoverSpecs(spark, indexDir, specList)
-    val codesT = tableName(indexDir)
-    val vecsT = vecsTable(indexDir)
-    if (!spark.catalog.tableExists(codesT)) return false
+    val ix = tables(indexDir)
+    ix.recover(spark)
+    if (!spark.catalog.tableExists(ix.name("codes"))) return false
     val g0 = geometry(indexDir)
-    val srcs = DedupIndex.fsBatches(spark, s"$indexDir/codes")
+    val srcs = IndexTables.fsBatches(spark, s"$indexDir/codes")
     if (srcs.isEmpty) return false
-    val missing = srcs -- DedupIndex.fsBatches(spark, s"$indexDir/vecs")
+    val missing = srcs -- IndexTables.fsBatches(spark, s"$indexDir/vecs")
     require(missing.isEmpty,
       s"ann index $indexDir: code batches ${missing.mkString(",")} have " +
         "no vecs reservoir — a codebook cannot re-train from its own " +
         "lossy codes; re-ingest those batches")
-    val stored = spark.table(vecsT)
+    val stored = spark.table(ix.name("vecs"))
       .filter(col("batch").isInCollection(srcs))
       .select(col("id"), col("cl"), col("v"))
     val body = geometryBody(stored, g0.m, g0.subDim, g0.nTrain)
     val g1 = parseGeometry(body.split("\n").toSeq)
-    val target = math.min(srcs.min, 0) - 1
-    val marker = s"$indexDir/_retrain.tsv"
-    def markerBody(state: String): String =
-      s"state\t$state\ntarget\t$target\n" +
-        s"sources\t${srcs.toSeq.sorted.mkString(",")}\n" +
-        body.split("\n").map(l => s"geom\t$l\n").mkString
-    AtomicText.writeAtomically(marker, markerBody("staged"))
-    // fold the reservoir, then re-encode codes FROM the folded vecs
-    // under the NEW codebook (write order: data first, probe last)
-    DedupIndex.stageAndWrite(spark, indexDir, vecsT, "vecs", Seq("id"),
-      buckets, target, srcs)
-    val qv = spark.table(vecsT).filter(col("batch") === target)
-      .select(col("id"), col("cl"), col("v"))
-    val newCodes = Embeddings.pqCodes(
-        Embeddings.pqSubs(qv, g1.m, g1.subDim), codebookDf(spark, g1))
-      .join(qv.select(col("id"), col("cl")), Seq("id"))
-      .select(col("id"), col("cl"), col("j"), col("code"))
-    val tmp = s"$indexDir/_compact_tmp_codes"
-    newCodes.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-    DedupIndex.writeIndexed(spark,
-      spark.read.parquet(tmp).select(col("id"), col("cl"), col("j"),
-        col("code")),
-      codesT, s"$indexDir/codes", Seq("cl"), buckets, target)
-    DedupIndex.fsDelete(spark, tmp)
-    AtomicText.writeAtomically(marker, markerBody("swapped"))
-    AtomicText.writeAtomically(geometryPath(indexDir), body)
-    srcs.toSeq.sorted.foreach(b =>
-      DedupIndex.dropBatch(spark, indexDir, specList, b))
-    DedupIndex.fsDelete(spark, marker)
+    ix.fold(spark, retrainMarker(indexDir), "swapped", srcs,
+      extra = body.split("\n").map(l => s"geom\t$l\n").mkString,
+      afterCommit = () => AtomicText.writeAtomically(geometryPath(indexDir), body)) {
+      target =>
+        // fold the reservoir, then re-encode codes FROM the folded vecs
+        // under the NEW codebook (write order: data first, probe last)
+        ix.stageAndWrite(spark, "vecs", buckets, target, srcs)
+        val qv = spark.table(ix.name("vecs")).filter(col("batch") === target)
+          .select(col("id"), col("cl"), col("v"))
+        ix.stage(spark, "codes", Embeddings.pqCodes(
+            Embeddings.pqSubs(qv, g1.m, g1.subDim), codebookDf(spark, g1))
+          .join(qv.select(col("id"), col("cl")), Seq("id"))
+          .select(col("id"), col("cl"), col("j"), col("code")), buckets, target)
+    }
     true
   }
 
   /** Finish (or undo) an interrupted [[retrain]] — a no-op unless the
-    * `_retrain.tsv` marker exists. Runs before every ingest, query,
-    * compact, and retrain. */
+    * `_retrain.tsv` marker exists. `staged` rolls back (the live
+    * geometry was never touched); `swapped` re-applies the marker's
+    * geometry (idempotent) and finishes the drops. Runs before every
+    * ingest, query, compact, and retrain. */
   private[graft] def recoverRetrain(spark: SparkSession,
-                                    indexDir: String): Unit = {
-    val marker = s"$indexDir/_retrain.tsv"
-    val lines = AtomicText.readLines(marker)
-    if (lines.isEmpty) return
-    val specList = codesSpec(indexDir)
-    val kv = lines.map(_.split("\t", 2))
-      .collect { case Array(k, v) => k -> v }.toMap
-    val target = kv("target").trim.toInt
-    val geomLines = lines.filter(_.startsWith("geom\t"))
-      .map(_.stripPrefix("geom\t"))
-    kv("state").trim match {
-      case "staged" =>
-        // generation rewrite may be torn; sources are intact and the
-        // live geometry was never touched — undo, leave un-retrained
-        for (s <- specList.reverse) {
-          if (spark.catalog.tableExists(s.table))
-            spark.sql(s"ALTER TABLE ${s.table} " +
-              s"DROP IF EXISTS PARTITION (batch='$target')")
-          DedupIndex.fsDelete(spark, s"$indexDir/${s.sub}/batch=$target")
-          DedupIndex.fsDelete(spark, s"$indexDir/_compact_tmp_${s.sub}")
-        }
-      case "swapped" =>
-        // generation + new geometry are both complete in the marker —
-        // re-apply the geometry (idempotent) and finish the drops
-        AtomicText.writeAtomically(geometryPath(indexDir),
-          geomLines.mkString("", "\n", "\n"))
-        val srcs = kv.get("sources").toSeq.flatMap(_.trim.split(","))
-          .filter(_.nonEmpty).map(_.toInt)
-        srcs.foreach(b => DedupIndex.dropBatch(spark, indexDir, specList, b))
-      case s => throw new IllegalStateException(
-        s"ann retrain marker $marker has unknown state '$s'")
+                                    indexDir: String): Unit =
+    tables(indexDir).recoverFold(spark, retrainMarker(indexDir), "swapped") { lines =>
+      AtomicText.writeAtomically(geometryPath(indexDir), lines
+        .filter(_.startsWith("geom\t")).map(_.stripPrefix("geom\t"))
+        .mkString("", "\n", "\n"))
     }
-    DedupIndex.fsDelete(spark, marker)
-  }
 
   /** ADC top-k over the STORED codes: probe the `nprobe` nearest
     * pinned centroids per query (exact integer n²·d², ties by
@@ -317,8 +262,9 @@ object AnnIndex {
     val lut = Embeddings.pqLut(
       Embeddings.pqSubs(qv, g.m, g.subDim), codebookDf(spark, g),
       lit(true))
-    DedupIndex.recoverSpecs(spark, indexDir, codesSpec(indexDir))
-    val codes = spark.table(tableName(indexDir))
+    val ix = tables(indexDir)
+    ix.recover(spark)
+    val codes = spark.table(ix.name("codes"))
       .select(col("id"), col("cl"), col("j"), col("code"))
     Embeddings.adcRank(codes.join(broadcast(probed), Seq("cl"))
       .join(broadcast(lut),
@@ -326,15 +272,9 @@ object AnnIndex {
           col("p_query_id") === lut("query_id")), k)
   }
 
-  /** Drop this index's catalog table, geometry, and data — for
-    * SCRATCH indexes whose lifetime is one query (sim12 registers
-    * this as a CacheScope release hook). */
-  def dropIndex(spark: SparkSession, indexDir: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${tableName(indexDir)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${vecsTable(indexDir)}")
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
+  /** Drop this index's tables, geometry, and data — for SCRATCH
+    * indexes whose lifetime is one query (sim12 registers this as a
+    * CacheScope release hook). */
+  def dropIndex(spark: SparkSession, indexDir: String): Unit =
+    tables(indexDir).dropIndex(spark)
 }

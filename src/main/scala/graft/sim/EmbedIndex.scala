@@ -3,8 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.text.DedupIndex
-import graft.util.AtomicText
+import graft.util.IndexTables
 
 /** Incremental EMBEDDING near-dup detection against a persisted
   * sign-LSH band index — the vector-space member of the incremental
@@ -23,63 +22,30 @@ import graft.util.AtomicText
   *     norms for the exact integer-cosine verify.
   *
   * LSH geometry `(bits, tables)` is pinned at creation
-  * (`_geometry.tsv`, the PhashIndex precedent): the planes themselves
-  * are deterministic functions of (table, bit, dim), so pinning the
-  * two counts pins the whole key space — stored bands keyed under a
-  * different geometry would be unreachable, which reads as silent
-  * recall loss, so a mismatch refuses loudly.
+  * ([[graft.util.IndexTables.pinGeometry]], the PhashIndex
+  * precedent): the planes themselves are deterministic functions of
+  * (table, bit, dim), so pinning the two counts pins the whole key
+  * space.
   *
-  * The vecs and bands writes OVERLAP (guide §2.6 — round 17):
-  * [[storedView]] reads only batches present in BOTH tables, so a
-  * crash between the writes leaves either orphan direction INERT —
-  * the torn batch is invisible (as if never ingested) until its
-  * retry overwrites both partitions (the ClusterIndex/SpanIndex
-  * both-present discipline, replacing the ordered vecs-before-bands
-  * contract). Batch-wise output equals the one-shot
+  * The vecs and bands writes OVERLAP; [[graft.util.IndexTables]]
+  * reads only batches present in BOTH tables (a bands-orphan's
+  * candidates would silently drop in the verify join, a vecs-orphan
+  * is unreachable), so a torn batch is invisible until its retry.
+  * Batch-wise output equals the one-shot
   * [[Embeddings.nearDupPairs]] pass exactly (deterministic keys +
   * exact integer cosine — no randomness to tolerate): dd25 gates on
   * dd7's oracle.
   */
 object EmbedIndex {
 
-  private def tableNames(indexDir: String): (String, String) = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(indexDir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(12)
-    (s"graft_embidx_bands_$tag", s"graft_embidx_vecs_$tag")
-  }
-
-  private def pair(indexDir: String): DedupIndex.PairSpec = {
-    val (bandsT, vecsT) = tableNames(indexDir)
-    DedupIndex.PairSpec(bandsT, "bands", Seq("t", "b"),
-      vecsT, "vecs", Seq("id"))
-  }
-
-  private def geometryPath(indexDir: String) = s"$indexDir/_geometry.tsv"
-
-  private def pinGeometry(indexDir: String, bits: Int, tables: Int): Unit = {
-    AtomicText.readLines(geometryPath(indexDir)) match {
-      case Seq() =>
-        AtomicText.writeAtomically(geometryPath(indexDir),
-          s"bits\t$bits\ntables\t$tables\n")
-      case lines =>
-        val kv = lines.map(_.split("\t"))
-          .collect { case Array(k, v) => k -> v.trim.toInt }.toMap
-        require(kv.get("bits").contains(bits) &&
-          kv.get("tables").contains(tables),
-          s"embed index $indexDir was created with " +
-            s"bits=${kv.getOrElse("bits", "?")}/" +
-            s"tables=${kv.getOrElse("tables", "?")}; this ingest asked " +
-            s"for bits=$bits/tables=$tables — stored bands would be " +
-            "unreachable under a different key space")
-    }
-  }
+  private[graft] def tables(indexDir: String) = new IndexTables(indexDir, "embidx",
+    Seq("vecs" -> Seq("id"), "bands" -> Seq("t", "b")))
 
   /** Fold the batch partitions into one generation
-    * ([[DedupIndex.compact]] semantics). */
+    * ([[graft.util.IndexTables]] OPTIMIZE). */
   def compact(spark: SparkSession, indexDir: String,
               buckets: Int = 4): Boolean =
-    DedupIndex.compactPair(spark, indexDir, pair(indexDir), buckets)
+    tables(indexDir).compact(spark, buckets)
 
   /** Ingest one batch of embeddings `(idCol, embCol)`: returns the
     * VERIFIED near-dup pairs involving this batch (`a_id < b_id`,
@@ -91,7 +57,8 @@ object EmbedIndex {
                   bits: Int = 8, tables: Int = 2, dim: Int = 64,
                   buckets: Int = 4): DataFrame = {
     val spark = vectors.sparkSession
-    pinGeometry(indexDir, bits, tables)
+    val ix = EmbedIndex.tables(indexDir)
+    ix.pinGeometry("embed", "bits" -> bits, "tables" -> tables)
     val newVecs = graft.util.CacheScope.track(vectors
       .select(col(idCol).as("id"),
         Embeddings.quantizeChecked(col(embCol), dim).as("v"))
@@ -103,13 +70,8 @@ object EmbedIndex {
           .as("tb"))
         .select(col("id"), col("tb.t").as("t"), col("tb.b").as("b")))
 
-    val (bandsT, vecsT) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, pair(indexDir))
-    DedupIndex.ensureTable(spark, newVecs, vecsT, s"$indexDir/vecs",
-      Seq("id"), buckets)
-    DedupIndex.ensureTable(spark, newBands, bandsT, s"$indexDir/bands",
-      Seq("t", "b"), buckets)
-    val stored = storedView(spark, indexDir, excludeBatch = batchId)
+    val stored = ix.open(spark, buckets, batchId,
+      "vecs" -> newVecs, "bands" -> newBands)
 
     // candidates = (new ⋈ new) ∪ (new ⋈ stored) bucket collisions —
     // two joins, never one join against a union (the family's
@@ -123,7 +85,7 @@ object EmbedIndex {
         .select(least(col("x"), col("y")).as("a_id"),
           greatest(col("x"), col("y")).as("b_id"))
     val cand = stored
-      .map(s => collisions(newBands).unionAll(collisions(s._1)))
+      .map(s => collisions(newBands).unionAll(collisions(s("bands"))))
       .getOrElse(collisions(newBands))
       .distinct()
 
@@ -136,9 +98,9 @@ object EmbedIndex {
         col("v").as(s"__nv_$tag"), col("n2").as(s"__nn_$tag"))
       val withNew = p.join(fresh, Seq(side), "left")
       stored match {
-        case Some((_, sv)) =>
+        case Some(st) =>
           withNew
-            .join(sv.select(col("id").as(side), col("v").as(s"__sv_$tag"),
+            .join(st("vecs").select(col("id").as(side), col("v").as(s"__sv_$tag"),
               col("n2").as(s"__sn_$tag")), Seq(side), "left")
             .withColumn(s"v$tag",
               coalesce(col(s"__nv_$tag"), col(s"__sv_$tag")))
@@ -157,51 +119,17 @@ object EmbedIndex {
           col("n2a"), col("n2b")).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
 
-    // overlapped writes (guide §2.6): reads gate on a batch being
-    // present in BOTH tables (class doc), so a torn pair is inert
-    // whichever side lands first; both inputs are CacheScope-pinned
+    // overlapped writes (guide §2.6): a torn pair is inert whichever
+    // side lands first (class doc); both inputs are CacheScope-pinned
     val out = verified.localCheckpoint()
     graft.util.Par.both(
-      DedupIndex.writeIndexed(spark, newVecs, vecsT, s"$indexDir/vecs",
-        Seq("id"), buckets, batchId),
-      DedupIndex.writeIndexed(spark, newBands, bandsT, s"$indexDir/bands",
-        Seq("t", "b"), buckets, batchId))
+      ix.write(spark, "vecs", newVecs, buckets, batchId),
+      ix.write(spark, "bands", newBands, buckets, batchId))
     out
   }
 
-  /** Drop this index's session-catalog tables and delete its data —
-    * for SCRATCH indexes whose lifetime is one query (dd25 registers
-    * this as a CacheScope release hook). */
-  def dropIndex(spark: SparkSession, indexDir: String): Unit = {
-    val (b, v) = tableNames(indexDir)
-    Seq(b, v).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
-
-  /** (bands, vecs) as committed — minus `excludeBatch` — or None
-    * before the first complete batch. Only batches present in BOTH
-    * tables are read (class doc): a bands-orphan's candidates would
-    * silently drop in the verify join, a vecs-orphan is unreachable —
-    * excluded, either orphan is inert until its batch retry. */
-  private[graft] def storedView(spark: SparkSession, indexDir: String,
-                                excludeBatch: Int)
-    : Option[(DataFrame, DataFrame)] = {
-    val (bandsT, vecsT) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, pair(indexDir))
-    if (!spark.catalog.tableExists(bandsT)) None
-    else {
-      val live = (DedupIndex.fsBatches(spark, s"$indexDir/bands")
-        intersect DedupIndex.fsBatches(spark, s"$indexDir/vecs")) -
-        excludeBatch
-      if (live.isEmpty) None
-      else Some((
-        spark.table(bandsT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("id", "t", "b"),
-        spark.table(vecsT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("id", "v", "n2")))
-    }
-  }
+  /** Drop this index's tables and data (scratch-index lifecycle; dd25
+    * registers it as a CacheScope release hook). */
+  def dropIndex(spark: SparkSession, indexDir: String): Unit =
+    tables(indexDir).dropIndex(spark)
 }

@@ -1402,10 +1402,11 @@ private[graft] object GraftManifestSource {
 
   /** The table's merged schema: driver-side footers, memoized per
     * dir ([[Sinks.readDirs]]), with a `mergeSchema` job only when the
-    * dirs disagree. */
+    * dirs disagree. Deletion-vector dirs are not data: their columns
+    * stay out. */
   def mergedSchemaOpt(spark: SparkSession, root: String,
                       manifestPath: String): Option[StructType] = {
-    val dirs = new TxnManifest(manifestPath).committedDirs(root)
+    val dirs = Sinks.splitDv(new TxnManifest(manifestPath).committedDirs(root))._1
     if (dirs.isEmpty) None
     else Some(Sinks.readDirs(spark, dirs, None).schema)
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.IndexTables
+
 /** Incremental dedup CLUSTERING against a persisted cluster-id table —
   * the step past the pair-grain index family ([[DedupIndex]],
   * [[SpanIndex]], [[graft.multimodal.PhashIndex]]): those answer
@@ -37,11 +39,10 @@ import org.apache.spark.sql.functions._
   * connected components on that contracted graph (O(batch) nodes; a
   * distributed loop, not driver union-find — a day-of-crawl batch's
   * contracted graph does not fit a driver), then write one row per
-  * new id and per relabeled member. Members write BEFORE assign;
-  * either orphan direction is inert — [[storedView]] reads only
+  * new id and per relabeled member. The two writes overlap; either
+  * orphan direction is inert — [[graft.util.IndexTables]] reads only
   * batches present in BOTH tables, so a torn batch is invisible until
-  * its retry overwrites both partitions (the round-15 SpanIndex
-  * discipline).
+  * its retry overwrites both partitions.
   *
   * Batch-wise assignments equal the one-shot
   * [[DedupClusters.connectedComponents]] over the concatenated pair
@@ -51,18 +52,8 @@ import org.apache.spark.sql.functions._
   */
 object ClusterIndex {
 
-  private[graft] def tableNames(indexDir: String): (String, String) = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(indexDir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(12)
-    (s"graft_clidx_assign_$tag", s"graft_clidx_members_$tag")
-  }
-
-  private def pair(indexDir: String): DedupIndex.PairSpec = {
-    val (assignT, membersT) = tableNames(indexDir)
-    DedupIndex.PairSpec(assignT, "assign", Seq("id"),
-      membersT, "members", Seq("cid"))
-  }
+  private[graft] def tables(indexDir: String) = new IndexTables(indexDir, "clidx",
+    Seq("members" -> Seq("cid"), "assign" -> Seq("id")))
 
   /** OPTIMIZE: fold the batch partitions into one generation AND
     * prune superseded rows (only the latest row per id survives — the
@@ -74,7 +65,7 @@ object ClusterIndex {
     * superseded. */
   def compact(spark: SparkSession, indexDir: String,
               buckets: Int = 4): Boolean =
-    DedupIndex.compactPair(spark, indexDir, pair(indexDir), buckets,
+    tables(indexDir).compact(spark, buckets,
       reduce = df => {
         val w = Window.partitionBy("id").orderBy(col("batch").desc)
         df.withColumn("__rn", row_number().over(w))
@@ -114,23 +105,19 @@ object ClusterIndex {
     val touched = p.select(col("a").as("id"))
       .unionAll(p.select(col("b").as("id"))).distinct()
 
-    val (assignT, membersT) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, pair(indexDir))
+    val ix = tables(indexDir)
     val empty = touched.limit(0)
       .select(col("id"), col("id").as("cid"))
-    DedupIndex.ensureTable(spark, empty, membersT, s"$indexDir/members",
-      Seq("cid"), buckets)
-    DedupIndex.ensureTable(spark, empty, assignT, s"$indexDir/assign",
-      Seq("id"), buckets)
-    val stored = storedView(spark, indexDir, excludeBatch = batchId)
+    val stored = ix.open(spark, buckets, batchId,
+      "members" -> empty, "assign" -> empty)
 
     // current canonical per touched id: latest stored row, else self.
     // The assign scan is bucketed on id, so both the semi-probe join
     // and the latest-row window run without a stored-side exchange.
     val cur = graft.util.CacheScope.track(stored match {
-      case Some((assign, _)) =>
+      case Some(st) =>
         val w = Window.partitionBy("id").orderBy(col("batch").desc)
-        val latest = assign.join(touched, Seq("id"), "left_semi")
+        val latest = st("assign").join(touched, Seq("id"), "left_semi")
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("id"), col("cid"))
@@ -161,8 +148,8 @@ object ClusterIndex {
       .select(col("id"), coalesce(col("ncid"), col("cid")).as("ncid"),
         col("cid"))
     val newIds = stored match {
-      case Some((assign, _)) =>
-        cur.select("id").join(assign.select("id").distinct(),
+      case Some(st) =>
+        cur.select("id").join(st("assign").select("id").distinct(),
           Seq("id"), "left_anti")
       case None => cur.select("id")
     }
@@ -170,8 +157,8 @@ object ClusterIndex {
       .select(col("id"), col("ncid").as("cid"))
     val losers = canonMap.filter(col("ncid") < col("cid"))
     val relabeled = stored match {
-      case Some((_, members)) =>
-        members.join(losers, Seq("cid"))
+      case Some(st) =>
+        st("members").join(losers, Seq("cid"))
           .select(col("id"), col("ncid").as("cid")).distinct()
       case None => newRows.limit(0)
     }
@@ -187,16 +174,12 @@ object ClusterIndex {
         .select(col("id"),
           coalesce(col("newcid"), col("cid")).as("canonical_id"))
         .localCheckpoint())
-    // overlapped writes (guide §2.6): reads gate on a batch being
-    // present in BOTH tables, so a torn pair is inert whichever side
-    // lands first — order carries no crash contract here (unlike the
-    // DedupIndex sets-before-bands direction), and `rows` is cached,
-    // so neither side recomputes it
+    // overlapped writes (guide §2.6): a torn pair is inert whichever
+    // side lands first, and `rows` is cached, so neither side
+    // recomputes it
     graft.util.Par.both(
-      DedupIndex.writeIndexed(spark, rows, membersT, s"$indexDir/members",
-        Seq("cid"), buckets, batchId),
-      DedupIndex.writeIndexed(spark, rows, assignT, s"$indexDir/assign",
-        Seq("id"), buckets, batchId))
+      ix.write(spark, "members", rows, buckets, batchId),
+      ix.write(spark, "assign", rows, buckets, batchId))
     out
   }
 
@@ -206,15 +189,14 @@ object ClusterIndex {
     * assign table + one join. */
   def currentAssignments(spark: SparkSession, indexDir: String,
                          nodes: DataFrame): DataFrame = {
-    val (assignT, _) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, pair(indexDir))
-    if (!spark.catalog.tableExists(assignT))
+    val ix = tables(indexDir)
+    ix.recover(spark)
+    if (!spark.catalog.tableExists(ix.name("assign")))
       nodes.select(col("id"), col("id").as("canonical_id"))
     else {
-      val live = liveBatches(spark, indexDir)
       val w = Window.partitionBy("id").orderBy(col("batch").desc)
-      val latest = spark.table(assignT)
-        .filter(col("batch").isInCollection(live))
+      val latest = spark.table(ix.name("assign"))
+        .filter(col("batch").isInCollection(ix.live(spark)))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("id"), col("cid"))
@@ -224,40 +206,8 @@ object ClusterIndex {
     }
   }
 
-  private def liveBatches(spark: SparkSession, indexDir: String): Set[Int] =
-    DedupIndex.fsBatches(spark, s"$indexDir/assign")
-      .intersect(DedupIndex.fsBatches(spark, s"$indexDir/members"))
-
-  /** (assign, members) with `batch` retained on assign (the latest-row
-    * order) — only batches present in BOTH tables are read, so a torn
-    * ingest (either orphan direction) is invisible until its retry
-    * lands both partitions. */
-  private[graft] def storedView(spark: SparkSession, indexDir: String,
-                                excludeBatch: Int)
-    : Option[(DataFrame, DataFrame)] = {
-    val (assignT, membersT) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, pair(indexDir))
-    if (!spark.catalog.tableExists(assignT)) None
-    else {
-      val live = liveBatches(spark, indexDir) - excludeBatch
-      if (live.isEmpty) None
-      else Some((
-        spark.table(assignT).filter(col("batch").isInCollection(live))
-          .select("id", "cid", "batch"),
-        spark.table(membersT).filter(col("batch").isInCollection(live))
-          .select("id", "cid")))
-    }
-  }
-
-  /** Drop this index's session-catalog tables and delete its data —
-    * for SCRATCH indexes whose lifetime is one query (dd24 registers
-    * this as a CacheScope release hook). */
-  def dropIndex(spark: SparkSession, indexDir: String): Unit = {
-    val (a, m) = tableNames(indexDir)
-    Seq(a, m).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
+  /** Drop this index's tables and data (scratch-index lifecycle; dd24
+    * registers it as a CacheScope release hook). */
+  def dropIndex(spark: SparkSession, indexDir: String): Unit =
+    tables(indexDir).dropIndex(spark)
 }

@@ -1,7 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.IndexTables
 
 /** Incremental near-duplicate detection against a PERSISTED MinHash
   * index — the operational shape of dedup at 100 TB: the corpus grows
@@ -10,46 +12,19 @@ import org.apache.spark.sql.functions._
   * corpus's signatures or pair graph
   * (cf. [[MinHash.nearDupPairs]], the one-shot form).
   *
-  * Index layout — BUCKETED catalog tables (external, rooted at
-  * `<dir>/bands` and `<dir>/sets`), partitioned by `batch`:
-  *   - bands `(id, band, key) PARTITIONED BY (batch)
-  *     CLUSTERED BY (band, key)` — the LSH probe table;
-  *   - sets  `(id, s) PARTITIONED BY (batch) CLUSTERED BY (id)` —
-  *     shingle sets for exact verification.
-  *
-  * Bucketing is what makes the index INCREMENTAL at scale: the stored
-  * side of every per-batch join arrives pre-partitioned on its join
-  * key, so the probe plan has NO Exchange on the stored side
-  * (ScaleSpec pins this) — per-batch shuffle volume is O(batch), not
-  * O(corpus history). Without it each ingest would re-shuffle the
-  * entire accumulated band table, the exact linear-in-history cost an
-  * incremental index exists to avoid. Partitioning by `batch` keeps
-  * ingestion append-only: a retry dynamic-partition-overwrites ONLY
-  * its own `batch=N` partition.
-  *
-  * The two writes OVERLAP (guide §2.6 — round 17): [[storedView]]
-  * reads only batches present in BOTH tables, so a crash between the
-  * writes leaves either orphan direction INERT — the torn batch is
-  * invisible (as if never ingested) until its retry overwrites both
-  * partitions. This is the ClusterIndex/SpanIndex both-present
-  * discipline; it replaces the earlier ordered-write contract
-  * (sets-before-bands + a loud bands-orphan refusal), whose serial
-  * write tail idled the machine once per ingest.
-  *
-  * Single-writer assumption (same as the reference's loader): batch
-  * ids are assigned monotonically by one producer; the catalog
-  * entries live in the session catalog (production = a persistent
-  * metastore over the same external paths).
+  * Index layout — two [[graft.util.IndexTables]] (which owns naming,
+  * bucketing, torn-batch gating, restart recovery and OPTIMIZE):
+  *   - sets  `(id, s) CLUSTERED BY (id)` — shingle sets for exact
+  *     verification (written first);
+  *   - bands `(id, band, key) CLUSTERED BY (band, key)` — the LSH
+  *     probe table.
+  * The two writes overlap; a torn batch is invisible until its retry
+  * lands both partitions.
   */
 object DedupIndex {
 
-  /** Catalog table names are derived from the index directory, so
-    * independent indexes in one session never collide. */
-  private def tableNames(indexDir: String): (String, String) = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(indexDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    (s"graft_idx_bands_$tag", s"graft_idx_sets_$tag")
-  }
+  private[graft] def tables(indexDir: String) = new IndexTables(indexDir, "idx",
+    Seq("sets" -> Seq("id"), "bands" -> Seq("band", "key")))
 
   /** Ingest one batch: returns the VERIFIED near-dup pairs involving
     * this batch (new-new and new-stored), and appends the batch's
@@ -77,23 +52,13 @@ object DedupIndex {
       sh.groupBy(idCol).agg(collect_set(col("shingle")).as("s"))
         .select(col(idCol).as("id"), col("s")))
 
-    // RESTART RECOVERY runs before the PROBE, not just before the
-    // write: after a catalog loss with surviving index data,
-    // storedView's tableExists check would otherwise return None and
-    // the batch would probe an "empty" index — silently missing every
-    // cross-batch pair (caught by IndexSpec's catalog-loss test).
-    // Both calls are no-ops when the tables exist or no data survived.
-    val (bandsT, setsT) = tableNames(indexDir)
-    recoverPair(spark, indexDir, pairSpec(indexDir))
-    ensureTable(spark, newSets, setsT, s"$indexDir/sets", Seq("id"), buckets)
-    ensureTable(spark, newBands, bandsT, s"$indexDir/bands",
-      Seq("band", "key"), buckets)
-
-    // exclude THIS batch id from the stored view: a crash-retry of a
-    // batch whose index write already ran would otherwise see its own
-    // rows in `stored`, duplicate every set lookup, and emit each
-    // pair 2-4 times through the joins
-    val stored = storedView(spark, indexDir, excludeBatch = batchId)
+    // restart recovery runs before the PROBE, not just before the
+    // write (IndexTables, catalog loss); THIS batch id is excluded
+    // from the stored view, or a crash-retry of a batch whose write
+    // already ran would emit each pair 2-4 times through the joins
+    val ix = tables(indexDir)
+    val stored = ix.open(spark, buckets, batchId,
+      "sets" -> newSets, "bands" -> newBands)
 
     // candidates = (new ⋈ new) ∪ (new ⋈ stored) band collisions — two
     // joins, NOT one join against a union: a union would discard the
@@ -108,7 +73,7 @@ object DedupIndex {
         .filter(col("x") =!= col("y"))
         .select(least(col("x"), col("y")).as("a"),
           greatest(col("x"), col("y")).as("b"))
-    val cand = stored.map(s => collisions(newBands).unionAll(collisions(s._1)))
+    val cand = stored.map(s => collisions(newBands).unionAll(collisions(s("bands"))))
       .getOrElse(collisions(newBands))
       .distinct()
 
@@ -125,9 +90,9 @@ object DedupIndex {
         .select(col("id").as(side), col("s").as(s"__new_$out"))
       val withNew = p.join(fresh, Seq(side), "left")
       stored match {
-        case Some((_, ss)) =>
+        case Some(st) =>
           withNew
-            .join(ss.select(col("id").as(side), col("s").as(s"__st_$out")),
+            .join(st("sets").select(col("id").as(side), col("s").as(s"__st_$out")),
               Seq(side), "left")
             .withColumn(out, coalesce(col(s"__st_$out"), col(s"__new_$out")))
             .drop(s"__new_$out", s"__st_$out")
@@ -145,16 +110,13 @@ object DedupIndex {
 
     // append AFTER the probe plans are built against the old index
     // state; localCheckpoint pins the result so callers can read it
-    // after the index advances. Overlapped writes (guide §2.6): reads
-    // gate on a batch being present in BOTH tables (class doc), so a
-    // torn pair is inert whichever side lands first, and both inputs
-    // are CacheScope-pinned — neither side recomputes the batch.
+    // after the index advances. Overlapped writes (guide §2.6): a torn
+    // pair is inert whichever side lands first, and both inputs are
+    // CacheScope-pinned — neither side recomputes the batch.
     val out = verified.localCheckpoint()
     graft.util.Par.both(
-      writeIndexed(spark, newSets, setsT, s"$indexDir/sets",
-        Seq("id"), buckets, batchId),
-      writeIndexed(spark, newBands, bandsT, s"$indexDir/bands",
-        Seq("band", "key"), buckets, batchId))
+      ix.write(spark, "sets", newSets, buckets, batchId),
+      ix.write(spark, "bands", newBands, buckets, batchId))
     out
   }
 
@@ -170,296 +132,16 @@ object DedupIndex {
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** Drop this index's session-catalog tables and delete its data —
-    * for SCRATCH indexes whose lifetime is one query (the
-    * ClusterIndex.dropIndex twin; cur5 registers it as a CacheScope
-    * release hook). */
-  def dropIndex(spark: SparkSession, indexDir: String): Unit = {
-    val (b, st) = tableNames(indexDir)
-    Seq(b, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
+  /** Drop this index's tables and data (scratch-index lifecycle; cur5
+    * registers it as a CacheScope release hook). */
+  def dropIndex(spark: SparkSession, indexDir: String): Unit =
+    tables(indexDir).dropIndex(spark)
 
-  /** One batch partition of one index table. The batch is
-    * pre-partitioned to exactly `buckets` tasks on the bucket keys —
-    * same hash as the bucket-id assignment — so each task writes ONE
-    * bucket file instead of tasks×buckets splinters. First write
-    * creates the bucketed external table; after that, dynamic-partition
-    * OVERWRITE of `batch=N` only — the retry-idempotent append. */
-  private[graft] def writeIndexed(spark: SparkSession, df: DataFrame, table: String,
-                           dir: String, bucketKeys: Seq[String], buckets: Int,
-                           batchId: Int): Unit = {
-    ensureTable(spark, df, table, dir, bucketKeys, buckets)
-    val withBatch = df.repartition(buckets, bucketKeys.map(col): _*)
-      .withColumn("batch", lit(batchId))
-    if (!spark.catalog.tableExists(table)) {
-      withBatch.write.mode(SaveMode.Overwrite)
-        .partitionBy("batch")
-        .bucketBy(buckets, bucketKeys.head, bucketKeys.tail: _*)
-        .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-        .option("path", dir)
-        .format("parquet")
-        .saveAsTable(table)
-    } else DynOverwrite.around(spark) {
-      withBatch.write.mode(SaveMode.Overwrite).insertInto(table)
-    }
-  }
-
-  /** Dynamic-partition-overwrite session flag, REFCOUNTED: two index
-    * writes overlapped via [[graft.util.Par]] both need the flag up
-    * for their whole action (`insertInto` reads the SESSION conf; the
-    * writer-level option is not honored on the insertInto path), so a
-    * bare set/restore pair would race — the first finisher restoring
-    * the conf under the second's still-running write. The flag goes up
-    * on first entry and is restored only when the last writer exits. */
-  private object DynOverwrite {
-    private val key = "spark.sql.sources.partitionOverwriteMode"
-    private var depth = 0
-    private var prev: Option[String] = None
-    def around[T](spark: SparkSession)(f: => T): T = {
-      synchronized {
-        if (depth == 0) { prev = spark.conf.getOption(key)
-          spark.conf.set(key, "dynamic") }
-        depth += 1
-      }
-      try f finally synchronized {
-        depth -= 1
-        if (depth == 0) prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
-      }
-    }
-  }
-
-  /** Restart recovery: an index whose DATA survives a JVM restart but
-    * whose catalog entry (session-scoped here; a metastore in
-    * production) did not must be RE-REGISTERED, never overwritten —
-    * without this, the `saveAsTable(Overwrite)` first-write path would
-    * silently destroy the accumulated index. Bucket count must match
-    * the original write (bucket-file names encode the id, not the
-    * count). */
-  private[graft] def ensureTable(spark: SparkSession, df: DataFrame, table: String,
-                          dir: String, bucketKeys: Seq[String],
-                          buckets: Int): Unit = {
-    if (!spark.catalog.tableExists(table) && fsBatches(spark, dir).nonEmpty) {
-      val cols = df.schema.fields
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-      val bk = bucketKeys.map(k => s"`$k`").mkString(", ")
-      spark.sql(
-        s"""CREATE TABLE $table ($cols) USING parquet
-           |PARTITIONED BY (batch INT)
-           |CLUSTERED BY ($bk) SORTED BY ($bk) INTO $buckets BUCKETS
-           |LOCATION '$dir'""".stripMargin)
-      spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-      ()
-    }
-  }
-
-  // ------------------------------------------------ OPTIMIZE (round 14)
-
-  /** One (probe, data) table pair of an incremental index — bands/sets
-    * here, bands/hashes + vbands/vframes in
-    * [[graft.multimodal.PhashIndex]]. */
-  private[graft] final case class PairSpec(
-    probeTable: String, probeSub: String, probeKeys: Seq[String],
-    dataTable: String, dataSub: String, dataKeys: Seq[String])
-
-  private[graft] def pairSpec(indexDir: String): PairSpec = {
-    val (bandsT, setsT) = tableNames(indexDir)
-    PairSpec(bandsT, "bands", Seq("band", "key"), setsT, "sets", Seq("id"))
-  }
-
-  /** OPTIMIZE: fold every batch partition of this index into ONE
-    * negative-id generation partition, preserving bucketing and the
-    * torn-batch invariant. Daily-batch ingestion otherwise leaves one
-    * partition per batch forever — hundreds of small partitions
-    * scanned by every probe. Crash-safe via a two-phase marker
-    * (`_compact_<sub>.tsv`): `staged` (rewrite may be torn → ROLL
-    * BACK, sources intact) flips to `committed` (target complete →
-    * ROLL FORWARD, finish the source drops) only after both tables'
-    * generation partitions land; [[recoverPair]] completes either
-    * way and runs before every ingest/probe/compact. Returns false
-    * when the index has ≤ 1 partition (nothing to fold). Folding a
-    * batch ENDS its retry window (its rows live in the generation
-    * partition afterwards) — compact only finalized batches, the
-    * same contract as [[graft.sources.Sinks.compact]]. */
+  /** OPTIMIZE: fold every complete batch into one generation partition
+    * ([[graft.util.IndexTables]] has the marker protocol). Daily-batch
+    * ingestion otherwise leaves one partition per batch forever —
+    * hundreds of small partitions scanned by every probe. */
   def compact(spark: SparkSession, indexDir: String,
               buckets: Int = 4): Boolean =
-    compactPair(spark, indexDir, pairSpec(indexDir), buckets)
-
-  /** One table of an incremental index, in compaction terms — the
-    * grain [[compactSpecs]] folds. A PairSpec is two of these in
-    * WRITE order (data first, probe last); [[graft.sim.AnnIndex]]'s
-    * single codes table is one. */
-  private[graft] final case class TableSpec(table: String, sub: String,
-                                            keys: Seq[String])
-
-  private def specsOf(ps: PairSpec): Seq[TableSpec] = Seq(
-    TableSpec(ps.dataTable, ps.dataSub, ps.dataKeys),
-    TableSpec(ps.probeTable, ps.probeSub, ps.probeKeys))
-
-  private[graft] def markerPath(indexDir: String, ps: PairSpec) =
-    s"$indexDir/_compact_${ps.probeSub}.tsv"
-
-  private[graft] def fsDelete(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
-
-  /** Drop one batch partition from catalog + disk — probe table
-    * FIRST (reverse write order: the torn invariant `bands ⊆ sets`
-    * must survive any crash point inside the drop). */
-  private[graft] def dropBatch(spark: SparkSession, indexDir: String,
-                        specs: Seq[TableSpec], b: Int): Unit =
-    for (s <- specs.reverse) {
-      if (spark.catalog.tableExists(s.table))
-        spark.sql(
-          s"ALTER TABLE ${s.table} DROP IF EXISTS PARTITION (batch='$b')")
-      fsDelete(spark, s"$indexDir/${s.sub}/batch=$b")
-    }
-
-  /** Rewrite the `srcs` batches of one table into `batch=target`.
-    * Staged through a scratch parquet dir: Spark refuses an
-    * insertInto whose source scans the destination table, and
-    * bucketed files must be written THROUGH the table (bucket ids
-    * ride the file names). Only `srcs` fold — a torn ingest's
-    * data-orphan partition must stay where a batch retry will
-    * overwrite it, never merge into a generation. `reduce` sees the
-    * folding rows WITH their `batch` column (identity by default) —
-    * [[ClusterIndex]] uses it to prune superseded assignment rows,
-    * whose supersession order lives in `batch`. */
-  private[graft] def stageAndWrite(spark: SparkSession, indexDir: String,
-                            table: String, sub: String, keys: Seq[String],
-                            buckets: Int, target: Int, srcs: Set[Int],
-                            reduce: DataFrame => DataFrame = identity): Unit = {
-    val tmp = s"$indexDir/_compact_tmp_$sub"
-    val cols = spark.table(table).columns.filter(_ != "batch").toSeq
-    reduce(spark.table(table).filter(col("batch").isInCollection(srcs)))
-      .select(cols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    writeIndexed(spark, spark.read.parquet(tmp).select(cols.map(col): _*),
-      table, s"$indexDir/$sub", keys, buckets, target)
-    fsDelete(spark, tmp)
-  }
-
-  private[graft] def compactPair(spark: SparkSession, indexDir: String,
-                                 ps: PairSpec, buckets: Int,
-                                 reduce: DataFrame => DataFrame = identity)
-    : Boolean =
-    compactSpecs(spark, indexDir, specsOf(ps), buckets, reduce)
-
-  /** The generalized fold: `specs` in WRITE order (probe LAST — its
-    * partitions are the source-of-truth batch list, complete ⊆ data
-    * by the torn invariant; a single-table index passes one spec).
-    * Marker/crash semantics unchanged from the pair form. */
-  private[graft] def compactSpecs(spark: SparkSession, indexDir: String,
-                                  specs: Seq[TableSpec], buckets: Int,
-                                  reduce: DataFrame => DataFrame = identity)
-    : Boolean = {
-    val probe = specs.last
-    recoverSpecs(spark, indexDir, specs)
-    if (!spark.catalog.tableExists(probe.table)) return false
-    // COMPLETE batches only — present in EVERY table of the index
-    // (the writes overlap, so either side can be the orphan): a torn
-    // ingest's orphan partition stays in place for its batch retry
-    val srcs = specs.map(s => fsBatches(spark, s"$indexDir/${s.sub}"))
-      .reduce(_ intersect _)
-    if (srcs.size <= 1) return false
-    val target = math.min(srcs.min, 0) - 1
-    val marker = s"$indexDir/_compact_${probe.sub}.tsv"
-    graft.util.AtomicText.writeAtomically(marker,
-      s"state\tstaged\ntarget\t$target\n" +
-        s"sources\t${srcs.toSeq.sorted.mkString(",")}\n")
-    // write order = ingest's (data first, probe last); a crash
-    // anywhere in here rolls BACK via the staged marker
-    specs.foreach(s => stageAndWrite(spark, indexDir, s.table, s.sub,
-      s.keys, buckets, target, srcs, reduce))
-    graft.util.AtomicText.writeAtomically(marker,
-      s"state\tcommitted\ntarget\t$target\n" +
-        s"sources\t${srcs.toSeq.sorted.mkString(",")}\n")
-    srcs.toSeq.sorted.foreach(b => dropBatch(spark, indexDir, specs, b))
-    fsDelete(spark, marker)
-    true
-  }
-
-  /** Finish (or undo) an interrupted [[compactPair]]. Runs before
-    * every ingest, probe view, and compaction — a no-op unless the
-    * marker file exists. */
-  private[graft] def recoverPair(spark: SparkSession, indexDir: String,
-                                 ps: PairSpec): Unit =
-    recoverSpecs(spark, indexDir, specsOf(ps))
-
-  private[graft] def recoverSpecs(spark: SparkSession, indexDir: String,
-                                  specs: Seq[TableSpec]): Unit = {
-    val marker = s"$indexDir/_compact_${specs.last.sub}.tsv"
-    val lines = graft.util.AtomicText.readLines(marker)
-    if (lines.isEmpty) return
-    val kv = lines.map(_.split("\t", 2))
-      .collect { case Array(k, v) => k -> v.trim }.toMap
-    val target = kv("target").toInt
-    kv("state") match {
-      case "staged" =>
-        // the generation rewrite may be torn; every source partition
-        // is still intact — undo and leave the index uncompacted
-        for (s <- specs.reverse) {
-          if (spark.catalog.tableExists(s.table))
-            spark.sql(s"ALTER TABLE ${s.table} " +
-              s"DROP IF EXISTS PARTITION (batch='$target')")
-          fsDelete(spark, s"$indexDir/${s.sub}/batch=$target")
-          fsDelete(spark, s"$indexDir/_compact_tmp_${s.sub}")
-        }
-      case "committed" =>
-        // every generation partition is complete — finish the drops
-        val srcs = kv.get("sources").toSeq
-          .flatMap(_.split(",")).filter(_.nonEmpty).map(_.toInt)
-        srcs.foreach(b => dropBatch(spark, indexDir, specs, b))
-        specs.foreach(s => fsDelete(spark, s"$indexDir/_compact_tmp_${s.sub}"))
-      case s => throw new IllegalStateException(
-        s"compaction marker $marker has unknown state '$s'")
-    }
-    fsDelete(spark, marker)
-  }
-
-  /** Batch ids present on disk under one index table root — a
-    * driver-side filesystem listing (Hadoop FS, so HDFS/object-store
-    * paths work), no Spark job. */
-  private[graft] def fsBatches(spark: SparkSession, dir: String): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toInt).toSet
-  }
-
-  /** (bands, sets) as currently committed — minus `excludeBatch` (the
-    * id being re-ingested) — or None before the first complete batch.
-    * Only batches present in BOTH tables are read (driver-side dir
-    * listing — no job), so a torn ingest (either orphan direction,
-    * the writes overlap) is invisible until its retry lands both
-    * partitions. Reads go through the CATALOG tables so the scans
-    * report their bucketed distribution; the `batch` partition filter
-    * prunes, then drops to keep the ingestion layout out of the
-    * logical view. */
-  private[graft] def storedView(spark: SparkSession, indexDir: String,
-                                excludeBatch: Int): Option[(DataFrame, DataFrame)] = {
-    val (bandsT, setsT) = tableNames(indexDir)
-    recoverPair(spark, indexDir, pairSpec(indexDir))
-    if (!spark.catalog.tableExists(bandsT)) None
-    else {
-      val live = (fsBatches(spark, s"$indexDir/bands")
-        intersect fsBatches(spark, s"$indexDir/sets")) - excludeBatch
-      if (live.isEmpty) None
-      else Some((
-        spark.table(bandsT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("id", "band", "key"),
-        spark.table(setsT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("id", "s")))
-    }
-  }
+    tables(indexDir).compact(spark, buckets)
 }

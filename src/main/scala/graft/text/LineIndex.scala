@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.IndexTables
+
 /** Incremental cross-document LINE dedup — t33's one-shot semantics
   * (CCNet/C4: the first corpus-wide occurrence of a line survives,
   * every later repeat drops) maintained across batches, the line-grain
@@ -29,21 +31,14 @@ import org.apache.spark.sql.functions._
   */
 object LineIndex {
 
-  private[graft] def tableName(indexDir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(indexDir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(12)
-    s"graft_idx_lines_$tag"
-  }
+  private[graft] def tables(indexDir: String) = new IndexTables(indexDir, "idx",
+    Seq("lines" -> Seq("h")))
 
-  private def spec(indexDir: String): Seq[DedupIndex.TableSpec] =
-    Seq(DedupIndex.TableSpec(tableName(indexDir), "lines", Seq("h")))
-
-  /** OPTIMIZE: fold batch partitions into one generation (the family
-    * marker protocol; single-table spec). */
+  /** OPTIMIZE: fold batch partitions into one generation
+    * ([[graft.util.IndexTables]] OPTIMIZE, single table). */
   def compact(spark: SparkSession, indexDir: String,
               buckets: Int = 4): Boolean =
-    DedupIndex.compactSpecs(spark, indexDir, spec(indexDir), buckets)
+    tables(indexDir).compact(spark, buckets)
 
   /** Ingest one batch: returns the batch's SURVIVING `(doc_id, ix)`
     * line occurrences (first in batch AND unseen in store), appending
@@ -65,26 +60,20 @@ object LineIndex {
     val firsts = lines.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("h"), col("doc_id"), col("ix"))
-    DedupIndex.recoverSpecs(spark, indexDir, spec(indexDir))
-    val t = tableName(indexDir)
-    DedupIndex.ensureTable(spark, firsts, t, s"$indexDir/lines",
-      Seq("h"), buckets)
+    val ix = tables(indexDir)
+    ix.recover(spark)
+    ix.ensure(spark, "lines", firsts, buckets)
+    val t = ix.name("lines")
     val kept =
       if (!spark.catalog.tableExists(t)) firsts
       else firsts.join(
         spark.table(t).filter(col("batch") =!= batchId).select(col("h")),
         Seq("h"), "left_anti")
-    DedupIndex.writeIndexed(spark, kept, t, s"$indexDir/lines",
-      Seq("h"), buckets, batchId)
+    ix.write(spark, "lines", kept, buckets, batchId)
     kept.select(col("doc_id"), col("ix")).localCheckpoint()
   }
 
   /** Drop this index's table and data (scratch-index lifecycle). */
-  def dropIndex(spark: SparkSession, indexDir: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${tableName(indexDir)}")
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
+  def dropIndex(spark: SparkSession, indexDir: String): Unit =
+    tables(indexDir).dropIndex(spark)
 }

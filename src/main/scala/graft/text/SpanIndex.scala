@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.IndexTables
+
 /** Incremental exact-substring span dedup against a PERSISTED anchor
   * index — [[SubstringSpans]]'s batch-against-corpus form, the same
   * operational move [[DedupIndex]] makes for MinHash and
@@ -35,39 +37,23 @@ import org.apache.spark.sql.functions._
   * the equality on the dd19 corpus and the cap-crossing
   * monotonicity separately.
   *
-  * The adf and anchors writes OVERLAP (guide §2.6 — round 17):
-  * [[storedView]] reads only batches present in BOTH tables, so a
-  * crash between the writes leaves either orphan direction INERT —
-  * an adf-orphan contributes no df (its docs contributed no
-  * probe-able anchors), an anchors-orphan contributes no anchors
-  * (whose df undercounts would otherwise silently disable the cap).
-  * The torn batch is invisible, suppresses nothing, and never blocks
-  * further ingests; its retry overwrites both partitions. This
-  * generalizes the round-15 adf-orphan exclusion to both directions
-  * and replaces the ordered-write (adf-before-anchors) contract.
-  * Compaction rides [[DedupIndex.compact]]'s marker protocol via
-  * [[compact]].
+  * The adf and anchors writes OVERLAP; [[graft.util.IndexTables]]
+  * reads only batches present in BOTH tables, so a torn batch is
+  * invisible until its retry: an adf-orphan would inflate the
+  * accumulated df and silently drop anchors (missed spans), an
+  * anchors-orphan would undercount df and silently disable the cap.
+  * Either orphan suppresses nothing and never blocks further ingests.
   */
 object SpanIndex {
 
-  private[graft] def tableNames(indexDir: String): (String, String) = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(indexDir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(12)
-    (s"graft_spidx_anchors_$tag", s"graft_spidx_adf_$tag")
-  }
-
-  private def pair(indexDir: String): DedupIndex.PairSpec = {
-    val (anchorsT, adfT) = tableNames(indexDir)
-    DedupIndex.PairSpec(anchorsT, "anchors", Seq("h"),
-      adfT, "adf", Seq("h"))
-  }
+  private[graft] def tables(indexDir: String) = new IndexTables(indexDir, "spidx",
+    Seq("adf" -> Seq("h"), "anchors" -> Seq("h")))
 
   /** Fold the batch partitions into one generation
-    * ([[DedupIndex.compact]] semantics). */
+    * ([[graft.util.IndexTables]] OPTIMIZE). */
   def compact(spark: SparkSession, indexDir: String,
               buckets: Int = 4): Boolean =
-    DedupIndex.compactPair(spark, indexDir, pair(indexDir), buckets)
+    tables(indexDir).compact(spark, buckets)
 
   /** Ingest one batch of tokenized docs `(idCol, tokensCol:
     * array<string>)`: returns the token-exact duplicated spans
@@ -96,21 +82,17 @@ object SpanIndex {
     val newAdf = graft.util.CacheScope.track(
       newAnchors.groupBy("h").agg(countDistinct(col("doc_id")).as("df")))
 
-    val (anchorsT, adfT) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, pair(indexDir))
-    DedupIndex.ensureTable(spark, newAdf, adfT, s"$indexDir/adf",
-      Seq("h"), buckets)
-    DedupIndex.ensureTable(spark, newAnchors, anchorsT,
-      s"$indexDir/anchors", Seq("h"), buckets)
-    val stored = storedView(spark, indexDir, excludeBatch = batchId)
+    val ix = tables(indexDir)
+    val stored = ix.open(spark, buckets, batchId,
+      "adf" -> newAdf, "anchors" -> newAnchors)
 
     // corpus-wide df for the batch's OWN anchors only: the stored adf
     // table is bucketed on h, so the semi-probe + partial sums stay
     // O(batch anchors), never O(corpus vocabulary)
     val totalDf = stored match {
-      case Some((_, sdf)) =>
-        newAdf.unionAll(
-          sdf.join(newAdf.select("h"), Seq("h"), "left_semi"))
+      case Some(st) =>
+        newAdf.unionAll(st("adf").select("h", "df")
+          .join(newAdf.select("h"), Seq("h"), "left_semi"))
           .groupBy("h").agg(sum("df").as("df"))
       case None => newAdf
     }
@@ -122,8 +104,8 @@ object SpanIndex {
       newAnchors.join(hot, Seq("h"), "left_anti"))
     // stored anchors matter only where they collide with the batch's
     // surviving anchors — and those h already passed the global cap
-    val storedKept = stored.map { case (sa, _) =>
-      sa.join(kept.select("h").distinct(), Seq("h")) }
+    val storedKept = stored.map(st =>
+      st("anchors").join(kept.select("h").distinct(), Seq("h")))
 
     val mNewNew = kept.as("a")
       .join(kept.as("b"), col("a.h") === col("b.h") &&
@@ -159,55 +141,19 @@ object SpanIndex {
       .select(col("id1"), col("id2"), col("start1"),
         (col("start1") + col("delta")).as("start2"), col("span_tokens"))
 
-    // overlapped writes (guide §2.6): reads gate on a batch being
-    // present in BOTH tables (class doc), so a torn pair is inert
-    // whichever side lands first; both inputs are CacheScope-pinned
+    // overlapped writes (guide §2.6): a torn pair is inert whichever
+    // side lands first (class doc); both inputs are CacheScope-pinned
     val out = spans.localCheckpoint()
     graft.util.Par.both(
-      DedupIndex.writeIndexed(spark, newAdf, adfT, s"$indexDir/adf",
-        Seq("h"), buckets, batchId),
-      DedupIndex.writeIndexed(spark, newAnchors, anchorsT,
-        s"$indexDir/anchors", Seq("h"), buckets, batchId))
+      ix.write(spark, "adf", newAdf, buckets, batchId),
+      ix.write(spark, "anchors", newAnchors, buckets, batchId))
     out
   }
 
-  /** Drop this index's session-catalog tables and delete its data —
-    * for SCRATCH indexes whose lifetime is one query (dd22 registers
-    * this as a CacheScope release hook). */
-  def dropIndex(spark: SparkSession, indexDir: String): Unit = {
-    val (a, d) = tableNames(indexDir)
-    Seq(a, d).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
-
-  /** (anchors, adf) as committed — minus `excludeBatch` — or None
-    * before the first complete batch. Only batches present in BOTH
-    * tables are read (class doc): an adf-orphan would inflate the
-    * accumulated df and silently drop anchors (missed spans), an
-    * anchors-orphan would undercount df and silently disable the cap
-    * — excluded, either orphan is inert whether or not the retry
-    * ever happens. */
-  private[graft] def storedView(spark: SparkSession, indexDir: String,
-                                excludeBatch: Int)
-    : Option[(DataFrame, DataFrame)] = {
-    val (anchorsT, adfT) = tableNames(indexDir)
-    DedupIndex.recoverPair(spark, indexDir, pair(indexDir))
-    if (!spark.catalog.tableExists(anchorsT)) None
-    else {
-      val live = (DedupIndex.fsBatches(spark, s"$indexDir/anchors")
-        intersect DedupIndex.fsBatches(spark, s"$indexDir/adf")) -
-        excludeBatch
-      if (live.isEmpty) None
-      else Some((
-        spark.table(anchorsT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("doc_id", "pos", "h"),
-        spark.table(adfT).filter(col("batch").isInCollection(live))
-          .drop("batch").select("h", "df")))
-    }
-  }
+  /** Drop this index's tables and data (scratch-index lifecycle; dd22
+    * registers it as a CacheScope release hook). */
+  def dropIndex(spark: SparkSession, indexDir: String): Unit =
+    tables(indexDir).dropIndex(spark)
 
   /** Anchors whose accumulated df CROSSES `maxDf` mid-ingest on this
     * index — the exact condition under which batch-wise output can
@@ -221,14 +167,12 @@ object SpanIndex {
     * table — per-batch DISTINCT anchors, not positions). */
   def capCrossings(spark: SparkSession, indexDir: String,
                    maxDf: Int): DataFrame = {
-    val (_, adfT) = tableNames(indexDir)
-    // same both-present gating as storedView: a torn batch's adf
+    val ix = tables(indexDir)
+    // same both-present gating as the stored view: a torn batch's adf
     // never fed any probe's accumulated df, so it must not fake a
     // crossing (an anchors-orphan has no adf rows to exclude)
-    val complete = DedupIndex.fsBatches(spark, s"$indexDir/adf")
-      .intersect(DedupIndex.fsBatches(spark, s"$indexDir/anchors"))
-    val live = spark.table(adfT)
-      .filter(col("batch").isInCollection(complete))
+    val live = spark.table(ix.name("adf"))
+      .filter(col("batch").isInCollection(ix.live(spark)))
     val w = Window.partitionBy("h").orderBy("batch")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("h")

@@ -82,3 +82,11 @@ object FooterBridge {
       new ParquetToSparkSchemaConverter(conf)).asNullable
   }
 }
+
+/** Listener-bus bridge: `SparkContext.listenerBus` is private[spark].
+  * Blocks until every event posted so far reached its listeners — how
+  * a caller reads a listener's counts without sleeping. */
+object ListenerBridge {
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+}

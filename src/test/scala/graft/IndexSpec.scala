@@ -167,15 +167,15 @@ class IndexSpec extends SparkSuite {
     DedupIndex.ingestBatch(batch(0), "doc_id", "text", tmp, 0)
     DedupIndex.ingestBatch(batch(1), "doc_id", "text", tmp, 1)
     assert(DedupIndex.compact(spark, tmp))
-    assert(DedupIndex.fsBatches(spark, s"$tmp/bands") == Set(-1))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$tmp/bands") == Set(-1))
     val gotPairs = pairKey(
       DedupIndex.ingestBatch(batch(2), "doc_id", "text", tmp, 2))
     assert(gotPairs == ctlPairs,
       "a probe against the compacted index must see identical pairs")
     // re-compaction folds the generation + the new batch into -2
     assert(DedupIndex.compact(spark, tmp))
-    assert(DedupIndex.fsBatches(spark, s"$tmp/bands") == Set(-2))
-    assert(DedupIndex.fsBatches(spark, s"$tmp/sets") == Set(-2))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$tmp/bands") == Set(-2))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$tmp/sets") == Set(-2))
     // nothing left to fold
     assert(!DedupIndex.compact(spark, tmp))
   }
@@ -196,15 +196,14 @@ class IndexSpec extends SparkSuite {
     val a = java.nio.file.Files.createTempDirectory("cw_staged_").toString
     DedupIndex.ingestBatch(batch(0), "doc_id", "text", a, 0)
     DedupIndex.ingestBatch(batch(1), "doc_id", "text", a, 1)
-    val psA = DedupIndex.pairSpec(a)
-    graft.util.AtomicText.writeAtomically(DedupIndex.markerPath(a, psA),
+    val ixA = DedupIndex.tables(a)
+    graft.util.AtomicText.writeAtomically(ixA.markerPath,
       "state\tstaged\ntarget\t-1\nsources\t0,1\n")
-    DedupIndex.stageAndWrite(spark, a, psA.dataTable, psA.dataSub,
-      psA.dataKeys, 4, -1, Set(0, 1))
+    ixA.stageAndWrite(spark, "sets", 4, -1, Set(0, 1))
     val rolledBack = pairKey(
       DedupIndex.ingestBatch(batch(2), "doc_id", "text", a, 2))
     assert(rolledBack == ctlPairs, "staged crash must roll back cleanly")
-    assert(DedupIndex.fsBatches(spark, s"$a/sets") == Set(0, 1, 2),
+    assert(graft.util.IndexTables.fsBatches(spark, s"$a/sets") == Set(0, 1, 2),
       "rollback must remove the torn generation partition")
 
     // COMMITTED crash: both generation partitions complete, marker
@@ -214,17 +213,15 @@ class IndexSpec extends SparkSuite {
     val b = java.nio.file.Files.createTempDirectory("cw_comm_").toString
     DedupIndex.ingestBatch(batch(0), "doc_id", "text", b, 0)
     DedupIndex.ingestBatch(batch(1), "doc_id", "text", b, 1)
-    val psB = DedupIndex.pairSpec(b)
-    DedupIndex.stageAndWrite(spark, b, psB.dataTable, psB.dataSub,
-      psB.dataKeys, 4, -1, Set(0, 1))
-    DedupIndex.stageAndWrite(spark, b, psB.probeTable, psB.probeSub,
-      psB.probeKeys, 4, -1, Set(0, 1))
-    graft.util.AtomicText.writeAtomically(DedupIndex.markerPath(b, psB),
+    val ixB = DedupIndex.tables(b)
+    ixB.stageAndWrite(spark, "sets", 4, -1, Set(0, 1))
+    ixB.stageAndWrite(spark, "bands", 4, -1, Set(0, 1))
+    graft.util.AtomicText.writeAtomically(ixB.markerPath,
       "state\tcommitted\ntarget\t-1\nsources\t0,1\n")
     val rolledFwd = pairKey(
       DedupIndex.ingestBatch(batch(2), "doc_id", "text", b, 2))
     assert(rolledFwd == ctlPairs, "committed crash must roll forward cleanly")
-    assert(DedupIndex.fsBatches(spark, s"$b/sets") == Set(-1, 2),
+    assert(graft.util.IndexTables.fsBatches(spark, s"$b/sets") == Set(-1, 2),
       "roll-forward must finish the source drops")
   }
 
@@ -248,8 +245,8 @@ class IndexSpec extends SparkSuite {
     PhashIndex.ingestBatch(fps.filter($"id" % 3 === 0), tmp, 0, bits)
     PhashIndex.ingestBatch(fps.filter($"id" % 3 === 1), tmp, 1, bits)
     assert(PhashIndex.compact(spark, tmp))
-    assert(graft.text.DedupIndex.fsBatches(spark, s"$tmp/bands") == Set(-1))
-    assert(graft.text.DedupIndex.fsBatches(spark, s"$tmp/hashes") == Set(-1))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$tmp/bands") == Set(-1))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$tmp/hashes") == Set(-1))
     val got = key(
       PhashIndex.ingestBatch(fps.filter($"id" % 3 === 2), tmp, 2, bits))
     assert(got == ctlPairs,
@@ -337,7 +334,7 @@ class IndexSpec extends SparkSuite {
         (102L, (0 until 6).map(j => s"f2_$j").mkString(" ") + " " + shared)),
       "doc_id", "w", dir2, 1)
     assert(SpanIndex.compact(spark, dir2))
-    assert(graft.text.DedupIndex.fsBatches(spark, s"$dir2/anchors") ==
+    assert(graft.util.IndexTables.fsBatches(spark, s"$dir2/anchors") ==
       Set(-1))
     val got = SpanIndex.ingestBatch(probe, "doc_id", "w", dir2, 2)
       .collect().map(_.toSeq).toSet
@@ -360,12 +357,11 @@ class IndexSpec extends SparkSuite {
       "doc_id", "w", dir, 0)
     // simulate a TORN batch 1: adf landed (df 20 on every shared
     // anchor — enough to blow the 16 cap), anchors write crashed
-    val (anchorsT, adfT) = SpanIndex.tableNames(dir)
-    val orphanAdf = spark.table(anchorsT).select(col("h")).distinct()
+    val ix = SpanIndex.tables(dir)
+    val orphanAdf = spark.table(ix.name("anchors")).select(col("h")).distinct()
       .select(col("h"), lit(20L).as("df"))
-    DedupIndex.writeIndexed(spark, orphanAdf, adfT, s"$dir/adf",
-      Seq("h"), 4, 1)
-    assert(DedupIndex.fsBatches(spark, s"$dir/adf") == Set(0, 1))
+    ix.write(spark, "adf", orphanAdf, 4, 1)
+    assert(graft.util.IndexTables.fsBatches(spark, s"$dir/adf") == Set(0, 1))
     // batch 2 probes the span: with the orphan counted the
     // accumulated df would read 2+20+1 = 23 > 16 and every shared
     // anchor would silently drop; excluded, df = 3 and both
@@ -429,10 +425,9 @@ class IndexSpec extends SparkSuite {
     // compact folds to one generation, prunes superseded rows, and
     // reads back identically
     assert(ClusterIndex.compact(spark, dir))
-    assert(graft.text.DedupIndex.fsBatches(spark, s"$dir/assign") == Set(-1))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$dir/assign") == Set(-1))
     assert(assignments(dir, 10L) == want)
-    val (assignT, _) = ClusterIndex.tableNames(dir)
-    val perId = spark.table(assignT).groupBy("id").count()
+    val perId = spark.table(ClusterIndex.tables(dir).name("assign")).groupBy("id").count()
       .filter(col("count") > 1).count()
     assert(perId == 0, "compaction must prune superseded assignment rows")
     // a batch after compaction still merges against the generation
@@ -443,10 +438,8 @@ class IndexSpec extends SparkSuite {
     // and to the next ingest until the retry lands both
     val dir2 = java.nio.file.Files.createTempDirectory("clidx2_").toString
     ClusterIndex.ingestBatch(pairsDf((1L, 2L)), dir2, 0)
-    val (_, membersT2) = ClusterIndex.tableNames(dir2)
-    graft.text.DedupIndex.writeIndexed(spark,
-      Seq((7L, 3L)).toDF("id", "cid"), membersT2, s"$dir2/members",
-      Seq("cid"), 4, 1)
+    ClusterIndex.tables(dir2).write(spark, "members",
+      Seq((7L, 3L)).toDF("id", "cid"), 4, 1)
     assert(assignments(dir2, 7L) ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L, 6L -> 6L,
         7L -> 7L), "torn members orphan must be invisible")
@@ -586,5 +579,71 @@ class IndexSpec extends SparkSuite {
       "doc_id", "text", dir, 2))
     assert(k2 == Set((20L, 1L)), s"post-compaction probe: $k2")
     LineIndex.dropIndex(spark, dir)
+  }
+
+  test("torn batch of every paired index, each table orphaned in turn: invisible, retry restores") {
+    // the writes of every pair overlap, so a crash can leave EITHER
+    // table's batch partition as the orphan. For each family and each
+    // of its tables: tear batch 0 by deleting that table's partition
+    // (data and catalog entry), the stored view must hide the batch,
+    // and a retry of batch 0 must bring back exactly the rows it had.
+    import graft.multimodal.PhashIndex
+    import graft.sim.EmbedIndex
+    import graft.text.{ClusterIndex, SpanIndex}
+    import org.apache.spark.sql.DataFrame
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .filter($"doc_id" < 40).select($"doc_id", $"text")
+    val hashes = docs.select($"doc_id".as("id"),
+      ($"doc_id" * 2654435761L % 4294967296L).as("hi"),
+      ($"doc_id" * 97561L % 4294967296L).as("lo"))
+    val frames = hashes.select($"id", ($"id" % 4).cast("int").as("frame_idx"),
+      $"hi", $"lo")
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .filter($"vec_id" < 40)
+      .select($"vec_id", $"embedding".cast("array<double>").as("e"))
+    val pairs = spark.range(0, 20).select($"id".as("a"), ($"id" + 100L).as("b"))
+    final case class Family(name: String, prefix: String, tables: Seq[String],
+                            ingest: String => Unit,
+                            view: String => Option[Map[String, DataFrame]])
+    val families = Seq(
+      Family("dedup", "idx", Seq("sets", "bands"),
+        d => DedupIndex.ingestBatch(docs, "doc_id", "text", d, 0),
+        d => DedupIndex.tables(d).stored(spark, excludeBatch = 99)),
+      Family("span", "spidx", Seq("adf", "anchors"),
+        d => SpanIndex.ingestBatch(docs.select($"doc_id", split($"text", " ")
+          .as("w")), "doc_id", "w", d, 0),
+        d => SpanIndex.tables(d).stored(spark, excludeBatch = 99)),
+      Family("embed", "embidx", Seq("vecs", "bands"),
+        d => EmbedIndex.ingestBatch(vecs, "vec_id", "e", d, 0, threshold = 0.9),
+        d => EmbedIndex.tables(d).stored(spark, excludeBatch = 99)),
+      Family("cluster", "clidx", Seq("members", "assign"),
+        d => ClusterIndex.ingestBatch(pairs, d, 0),
+        d => ClusterIndex.tables(d).stored(spark, excludeBatch = 99)),
+      Family("phash", "phidx", Seq("hashes", "bands"),
+        d => PhashIndex.ingestBatch(hashes, d, 0, bandBits = 8),
+        d => PhashIndex.tables(d).stored(spark, excludeBatch = 99)),
+      Family("phash-video", "phidx", Seq("vframes", "vbands"),
+        d => PhashIndex.ingestVideoBatch(frames, d, 0, bandBits = 8),
+        d => PhashIndex.videoTables(d).stored(spark, excludeBatch = 99)))
+    for (f <- families; torn <- f.tables) {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"torn_${f.name}_$torn").toString
+      f.ingest(dir)
+      def rows = f.view(dir).map(_.map { case (t, df) => t -> df.count() })
+      val before = rows
+      assert(before.exists(_.values.forall(_ > 0)), s"${f.name}: empty index $before")
+      val tag = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).map("%02x".format(_))
+        .mkString.take(12)
+      spark.sql(s"ALTER TABLE graft_${f.prefix}_${torn}_$tag " +
+        "DROP IF EXISTS PARTITION (batch='0')")
+      val part = new java.io.File(s"$dir/$torn/batch=0")
+      assert(part.isDirectory && org.apache.hadoop.fs.FileUtil.fullyDelete(part))
+      assert(f.view(dir).isEmpty,
+        s"${f.name}: batch 0 with its $torn partition torn leaked into the view")
+      f.ingest(dir)
+      assert(rows == before,
+        s"${f.name}: retry after a torn $torn partition must restore batch 0")
+    }
   }
 }

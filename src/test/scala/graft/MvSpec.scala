@@ -100,20 +100,11 @@ class MvSpec extends SparkSuite {
     val e = GraftSqlTables.lookup(Seq(src)).get
     StatsSinks.appendBatchStats(seed(20050).where("id >= 20000"), e.root, 1)
     man.commit(1, Seq(s"${e.root}/batch=1"))
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_blind")
-      Thread.sleep(1500) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get < 2000,
-      s"incremental refresh read ${recordsRead.get} records — the " +
+    }
+    assert(recordsRead < 2000,
+      s"incremental refresh read ${recordsRead} records — the " +
         "20000-row base table must not be scanned")
     val got = GraftMvs.read(spark, "mv_blind")
       .agg(sum("n")).collect().head.getLong(0)
@@ -166,20 +157,11 @@ class MvSpec extends SparkSuite {
     val e = GraftSqlTables.lookup(Seq(src)).get
     StatsSinks.appendBatchStats(seed(20050).where("id >= 20000"), e.root, 1)
     man.commit(1, Seq(s"${e.root}/batch=1"))
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_mmf")
-      Thread.sleep(1500) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get < 2000,
-      s"insert-only min/max refresh read ${recordsRead.get} records — " +
+    }
+    assert(recordsRead < 2000,
+      s"insert-only min/max refresh read ${recordsRead} records — " +
         "the 20000-row base table must not be scanned")
     assert(sortedRows(GraftMvs.read(spark, "mv_mmf")) == sortedRows(expected))
 
@@ -297,20 +279,11 @@ class MvSpec extends SparkSuite {
     // insert-only wave FOLDS (sketch union) without reading the base
     StatsSinks.appendBatchStats(rows(20000, 20060), root, 1)
     man.commit(1, Seq(s"$root/batch=1"))
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_hll")
-      Thread.sleep(1500) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get < 2000,
-      s"insert-only sketch refresh read ${recordsRead.get} records — " +
+    }
+    assert(recordsRead < 2000,
+      s"insert-only sketch refresh read ${recordsRead} records — " +
         "the 20000-row base must not be scanned")
     val folded = served
     assert(folded.map { case (g, v) => g -> v._1 } ==
@@ -403,20 +376,11 @@ class MvSpec extends SparkSuite {
     // insert-only wave FOLDS (summary merge) without reading the base
     StatsSinks.appendBatchStats(rows(20000, 20080), root, 1)
     man.commit(1, Seq(s"$root/batch=1"))
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_qt")
-      Thread.sleep(1500) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get < 2000,
-      s"insert-only summary refresh read ${recordsRead.get} records — " +
+    }
+    assert(recordsRead < 2000,
+      s"insert-only summary refresh read ${recordsRead} records — " +
         "the 20000-row base must not be scanned")
     checkBounds()
 
@@ -545,20 +509,11 @@ class MvSpec extends SparkSuite {
     GraftSql.execute(spark, s"DELETE FROM $src WHERE id % 13 = 5")
     GraftSql.execute(spark, s"UPDATE $src SET m = m + 100 WHERE id % 29 = 2")
     GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_chain_child")
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_chain_top")
-      Thread.sleep(1500) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get < 2000,
-      s"parent refresh read ${recordsRead.get} records — it must fold " +
+    }
+    assert(recordsRead < 2000,
+      s"parent refresh read ${recordsRead} records — it must fold " +
         "the child's delta, never re-scan the 20000-row base")
     assert(sortedRows(GraftMvs.read(spark, "mv_chain_top"))
       == sortedRows(expected))
@@ -776,20 +731,11 @@ class MvSpec extends SparkSuite {
     // the 3000-row fact base is never re-scanned
     GraftSql.execute(spark, s"DELETE FROM $fact WHERE id % 7 = 2")
     GraftSql.execute(spark, s"UPDATE $fact SET qty = qty + 5 WHERE id % 11 = 0")
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_join")
-      Thread.sleep(1500) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get < 2500,
-      s"fact-delta refresh read ${recordsRead.get} records — the " +
+    }
+    assert(recordsRead < 2500,
+      s"fact-delta refresh read ${recordsRead} records — the " +
         "3000-row fact base must not be scanned")
     assert(sortedRows(GraftMvs.read(spark, "mv_join")) == sortedRows(expected))
 
@@ -850,20 +796,11 @@ class MvSpec extends SparkSuite {
     GraftSql.execute(spark, s"DELETE FROM $fact WHERE id % 9 = 2")
     GraftSql.execute(spark,
       s"UPDATE $fact SET qty = qty + 7 WHERE id % 13 = 0")
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_star")
-      Thread.sleep(1500) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get < 3200,
-      s"fact-delta star refresh read ${recordsRead.get} records — the " +
+    }
+    assert(recordsRead < 3200,
+      s"fact-delta star refresh read ${recordsRead} records — the " +
         "4000-row fact base must not be scanned")
     assert(sortedRows(GraftMvs.read(spark, "mv_star")) == sortedRows(expected))
 
@@ -981,20 +918,11 @@ class MvSpec extends SparkSuite {
     GraftSql.execute(spark, s"DELETE FROM $fact WHERE id % 9 = 2")
     GraftSql.execute(spark,
       s"UPDATE $fact SET qty = qty + 7 WHERE id % 13 = 0")
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "REFRESH MATERIALIZED VIEW mv_lstar")
-      Thread.sleep(1500) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get < 3200,
-      s"fact-delta LEFT-star refresh read ${recordsRead.get} records — " +
+    }
+    assert(recordsRead < 3200,
+      s"fact-delta LEFT-star refresh read ${recordsRead} records — " +
         "the 4000-row fact base must not be scanned")
     assert(sortedRows(GraftMvs.read(spark, "mv_lstar")) == sortedRows(expected))
 

@@ -31,11 +31,11 @@ object PlanScans {
       override def onFailure(action: String, qe: QueryExecution,
                              e: Exception): Unit = ()
     }
-    org.apache.spark.graftbridge.TestConfBridge.drainListenerBus(sc)
+    org.apache.spark.sql.graftbridge.ListenerBridge.drainListenerBus(sc)
     spark.listenerManager.register(listener)
     try {
       val a = body
-      org.apache.spark.graftbridge.TestConfBridge.drainListenerBus(sc)
+      org.apache.spark.sql.graftbridge.ListenerBridge.drainListenerBus(sc)
       (a, out.synchronized(out.toSeq))
     } finally spark.listenerManager.unregister(listener)
   }

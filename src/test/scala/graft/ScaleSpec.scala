@@ -754,21 +754,11 @@ class ScaleSpec extends SparkSuite {
     }
     GraftSqlTables.register("ret_t", GraftSqlTables.Entry(root,
       s"$base/manifest.tsv", keys = Seq("id")))
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = RecordsRead.during(spark) {
       GraftSql.execute(spark, "DELETE FROM ret_t WHERE id < 2000")
-      // drain the listener bus before reading the counter
-      Thread.sleep(1500)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(recordsRead.get == 0,
-      s"retention delete read ${recordsRead.get} records — expected a " +
+    }
+    assert(recordsRead == 0,
+      s"retention delete read ${recordsRead} records — expected a " +
         "metadata-only commit")
     // the swap un-named the two covered dirs in ONE commit
     val dirs = man.committedDirs(root)
@@ -1769,8 +1759,8 @@ class ScaleSpec extends SparkSuite {
         $"doc_id".as("x"))
     val probePairs = docs.limit(50).select($"doc_id".as("a"))
     def check(phase: String): Unit = {
-      val (bands, sets) = graft.text.DedupIndex
-        .storedView(spark, tmp, excludeBatch = 99).get
+      val st = graft.text.DedupIndex.tables(tmp).stored(spark, excludeBatch = 99).get
+      val (bands, sets) = (st("bands"), st("sets"))
       for ((name, joined) <- Seq(
         "bands" -> probeBands.join(bands, Seq("band", "key")),
         "sets"  -> probePairs.join(sets.withColumnRenamed("id", "a"), Seq("a")))) {
@@ -1802,8 +1792,8 @@ class ScaleSpec extends SparkSuite {
       // still streams into probes exchange-free
       assert(graft.text.DedupIndex.compact(spark, tmp),
         "compact must fold the two batches")
-      assert(graft.text.DedupIndex.fsBatches(spark, s"$tmp/bands") == Set(-1)
-        && graft.text.DedupIndex.fsBatches(spark, s"$tmp/sets") == Set(-1),
+      assert(graft.util.IndexTables.fsBatches(spark, s"$tmp/bands") == Set(-1)
+        && graft.util.IndexTables.fsBatches(spark, s"$tmp/sets") == Set(-1),
         "both tables must hold exactly the generation partition")
       check("compacted")
     } finally {
@@ -1821,8 +1811,8 @@ class ScaleSpec extends SparkSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", split($"text", " ").as("w"))
     graft.text.SpanIndex.ingestBatch(docs, "doc_id", "w", tmp, 0)
-    val (anchors, adf) = graft.text.SpanIndex
-      .storedView(spark, tmp, excludeBatch = 99).get
+    val st = graft.text.SpanIndex.tables(tmp).stored(spark, excludeBatch = 99).get
+    val (anchors, adf) = (st("anchors"), st("adf"))
     val probeH = docs.limit(50).select(md5($"doc_id".cast("string")).as("h"))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1857,8 +1847,8 @@ class ScaleSpec extends SparkSuite {
     val pairs = spark.range(0, 400)
       .select($"id".as("a"), ($"id" + 1000L).as("b"))
     graft.text.ClusterIndex.ingestBatch(pairs, tmp, 0)
-    val (assign, members) = graft.text.ClusterIndex
-      .storedView(spark, tmp, excludeBatch = 99).get
+    val st = graft.text.ClusterIndex.tables(tmp).stored(spark, excludeBatch = 99).get
+    val (assign, members) = (st("assign"), st("members"))
     val touched = spark.range(0, 50).select($"id")
     val losers = spark.range(0, 20).select($"id".as("cid"))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1941,8 +1931,8 @@ class ScaleSpec extends SparkSuite {
       .select($"doc_id".as("id"), ($"doc_id" * 2654435761L % 4294967296L).as("hi"),
         ($"doc_id" * 97561L % 4294967296L).as("lo"))
     graft.multimodal.PhashIndex.ingestBatch(hashes, tmp, 0, bandBits = 8)
-    val (bands, stHashes) = graft.multimodal.PhashIndex
-      .storedView(spark, tmp, excludeBatch = 99).get
+    val st = graft.multimodal.PhashIndex.tables(tmp).stored(spark, excludeBatch = 99).get
+    val (bands, stHashes) = (st("bands"), st("hashes"))
     val probeBands = hashes.limit(50)
       .select(($"id" % 8).cast("int").as("bi"), ($"id" % 251).as("bv"),
         $"id".as("x"))
@@ -1987,8 +1977,8 @@ class ScaleSpec extends SparkSuite {
         ($"doc_id" * 2654435761L % 4294967296L).as("hi"),
         ($"doc_id" * 97561L % 4294967296L).as("lo"))
     graft.multimodal.PhashIndex.ingestVideoBatch(frames, tmp, 0, bandBits = 8)
-    val (vbands, vframes) = graft.multimodal.PhashIndex
-      .storedVideoView(spark, tmp, excludeBatch = 99).get
+    val st = graft.multimodal.PhashIndex.videoTables(tmp).stored(spark, excludeBatch = 99).get
+    val (vbands, vframes) = (st("vbands"), st("vframes"))
     val probeBands = frames.limit(50)
       .select(($"id" % 8).cast("int").as("bi"), ($"id" % 251).as("bv"),
         $"id".as("x"), $"frame_idx".as("fx"))
@@ -2238,7 +2228,7 @@ class ScaleSpec extends SparkSuite {
       "doc_id", "text", tmp, 0)
     LineIndex.ingestBatch(docs.filter($"doc_id" % 2 === 1),
       "doc_id", "text", tmp, 1)
-    val t = LineIndex.tableName(tmp)
+    val t = LineIndex.tables(tmp).name("lines")
     val probe = docs.limit(50).select(md5($"text").as("h"), $"doc_id", lit(0L).as("ix"))
     val joined = probe.join(
       spark.table(t).filter($"batch" =!= 2).select($"h"),

@@ -170,7 +170,7 @@ class SimSpec extends SparkSuite {
     // OPTIMIZE folds the batch partitions into one generation and the
     // query is invariant
     assert(AnnIndex.compact(spark, dir))
-    assert(graft.text.DedupIndex.fsBatches(spark, s"$dir/codes") == Set(-1))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$dir/codes") == Set(-1))
     assert(canon(AnnIndex.query(spark, dir, queries,
       "vec_id", "embedding", k = 5, nprobe = 2)) == oneShot)
     AnnIndex.dropIndex(spark, dir)
@@ -207,8 +207,8 @@ class SimSpec extends SparkSuite {
     assert(canon(AnnIndex.query(spark, dir, queries,
       "vec_id", "embedding", k = 5, nprobe = 2)) == before)
     // sources folded into one generation; further ingest still works
-    assert(DedupIndex.fsBatches(spark, s"$dir/codes") == Set(-1))
-    assert(DedupIndex.fsBatches(spark, s"$dir/vecs") == Set(-1))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$dir/codes") == Set(-1))
+    assert(graft.util.IndexTables.fsBatches(spark, s"$dir/vecs") == Set(-1))
     AnnIndex.dropIndex(spark, dir)
     // ---- drifted: create trained on region Y only; region X (far
     // offset, SMALLER ids so the re-trained sampling-init codebook

@@ -1123,12 +1123,12 @@ class SourcesSpec extends SparkSuite {
         jobs.incrementAndGet(); ()
       }
     }
-    org.apache.spark.graftbridge.TestConfBridge.drainListenerBus(spark.sparkContext)
+    org.apache.spark.sql.graftbridge.ListenerBridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     val read =
       try {
         val df = Sinks.readDirs(spark, dirs, None)
-        org.apache.spark.graftbridge.TestConfBridge.drainListenerBus(spark.sparkContext)
+        org.apache.spark.sql.graftbridge.ListenerBridge.drainListenerBus(spark.sparkContext)
         df
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get == 0, s"${jobs.get} jobs for a cold readDirs")
@@ -1136,6 +1136,23 @@ class SourcesSpec extends SparkSuite {
       spark.read.parquet(d).schema), d))
     assert(read.schema == spark.read.parquet(dirs: _*).schema)
     assert(read.count() == 4)
+  }
+
+  test("graft-manifest schema leaves out deletion-vector columns") {
+    import graft.sources.GraftManifestSource
+    val tmp = java.nio.file.Files.createTempDirectory("dv_schema_").toString
+    val root = s"$tmp/t"
+    val man = new TxnManifest(s"$tmp/_commits")
+    Sinks.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root, 0)
+    man.commit(0, Seq(s"$root/batch=0"))
+    Sinks.mergeDeleteDV(spark, Seq(1L).toDF("id"), root, man, Seq("id"),
+      mergeId = 1)
+    assert(GraftManifestSource.mergedSchemaOpt(spark, root, man.path)
+      .map(_.fieldNames.toSeq).contains(Seq("id", "v")))
+    val df = spark.read.format("graft-manifest")
+      .option("manifest", man.path).load(root)
+    assert(df.columns.toSeq == Seq("id", "v"))
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
   test("mergedSchemaOpt: an evolved table still reads its merged schema") {
