@@ -1445,19 +1445,24 @@ object GraftMvs {
       val cur = if (d.hasLeft)
         cur0.select((GKey +: accCols).map(col): _*) else cur0
       // right join: untouched groups are never read into the plan's
-      // output — only delta groups (new or existing) flow onward
-      val merged0 = cur.join(dd, mk, "right")
-      val merged = accCols.foldLeft(merged0) { (df, n) =>
-        val t = d.storSchema(d.storSchema.fieldIndex(n)).dataType
-        df.withColumn(n,
-          coalesce(col(n), lit(0).cast(t)) +
-            coalesce(col(s"__d_$n"), lit(0).cast(t)))
-      }
-      val updates = conform(merged.filter(col(GRows) > 0), d.storSchema)
-      val deletes = merged.filter(col(GRows) <= 0)
-        .select(mk.map(col): _*)
-      Sinks.merge(spark, Some(updates), Some(deletes), dataRoot(baseDir),
-        mvMan, mk, newBatch, cdf = true, bucketBy = d.bucketSpec)
+      // output — only delta groups (new or existing) flow onward; one
+      // projection folds every accumulator into the storage schema
+      val merged = cur.join(dd, mk, "right").select(d.storSchema.fields.map { f =>
+        val v = if (!accCols.contains(f.name)) col(f.name)
+          else coalesce(col(f.name), lit(0).cast(f.dataType)) +
+            coalesce(col(s"__d_${f.name}"), lit(0).cast(f.dataType))
+        v.cast(f.dataType).as(f.name)
+      }.toSeq: _*)
+      // ONE tagged frame, so the feed read, the delta aggregate and the
+      // state join run once: a live group updates (or inserts when new),
+      // a dead one deletes its stored row
+      val live = col(GRows) > 0
+      Sinks.mergeRows(spark, merged.select(col("*"),
+          when(live, lit("update")).otherwise(lit("delete")).as(Sinks.OnMatchCol),
+          live.as(Sinks.OnMissCol)),
+        writes = true, deleteWins = false, dataRoot(baseDir), mvMan, mk,
+        newBatch, cdf = true, unionRoots = false, physSchema = None,
+        bucketBy = d.bucketSpec)
     }
   }
 

@@ -599,7 +599,7 @@ object Sinks {
     try {
       val range = keyRange(delKeys, keys)
       val candidates = bloomCandidateDirs(spark,
-        statsCandidateDirs(spark, dataDirs, range, keys), delKeys, keys)
+        statsCandidateDirs(spark, dataDirs, range, keys), smallRows(delKeys), keys)
       val matched =
         if (candidates.isEmpty) None
         else {
@@ -696,7 +696,7 @@ object Sinks {
         (0 until 2 * keys.size).map(i => pre.get(i + 1)))
       val range = if (rangeRow.anyNull) None else Some(rangeRow)
       val candidates = bloomCandidateDirs(spark,
-        statsCandidateDirs(spark, dataDirs, range, keys), upKeys, keys)
+        statsCandidateDirs(spark, dataDirs, range, keys), smallRows(upKeys), keys)
       // old versions of matched keys, with their (file, position) —
       // the same probe shape as the DV delete, prior DVs excluded
       val matched =
@@ -836,10 +836,13 @@ object Sinks {
   /** The two-pass copy-on-write MERGE core (Delta's
     * find-touched-files-then-rewrite shape) at batch-dir granularity.
     *
-    *   1. PRUNE — one small job folds the source keys' per-column
-    *      [min, max]; dirs whose [[BatchStats]] sidecars exclude the
-    *      range (or whose bloom sidecars reject every key of a small
-    *      key set) are never scanned, and the range prunes row groups
+    *   1. PRUNE — a batch-sized source (at most [[BloomProbeMaxKeys]]
+    *      rows) is collected once and continues as a local relation,
+    *      its keys' per-column [min, max] folded on the driver; a bulk
+    *      source stays pinned and folds its range in one small job.
+    *      Dirs whose [[BatchStats]] sidecars exclude the range (or
+    *      whose bloom sidecars reject every key of a batch-sized
+    *      source) are never scanned, and the range prunes row groups
     *      inside the rest;
     *   2. PASS 1 — one scan of the surviving, range-filtered,
     *      DV-applied candidate dirs, semi-joined with the source keys
@@ -888,6 +891,7 @@ object Sinks {
     : Unit =
     withJobDescription(spark, s"graft: merge $root -> batch=$mergeId") {
     import org.apache.spark.sql.functions.{lit, max, struct, sum, when}
+    import scala.jdk.CollectionConverters._
     val (dirs, dvDirs) = splitDv(
       if (unionRoots) manifest.committedDirsAll()
       else manifest.committedDirs(root))
@@ -907,12 +911,27 @@ object Sinks {
       pinned += df
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val src = pin(source.where(isUpd || isDel || col(OnMissCol)))
+    val live = pin(source.where(isUpd || isDel || col(OnMissCol)))
     try {
-    val range = keyRange(src, keys)
+    // a batch-sized source comes to the driver once, and every later
+    // query plans over a local relation of its rows instead of the
+    // caller's plan, so pass 1, the rewrite and the feed neither
+    // re-analyse nor re-run it; the rows also give the key range and
+    // the bloom keys. A bulk source stays pinned and folds its key
+    // range in a job. A local relation scans as one partition per
+    // core; one partition keeps each query's source side (the key
+    // broadcast, the window's input) at one task
+    val small = smallRows(live)
+    val src = small.fold(live)(rows =>
+      spark.createDataFrame(rows.asJava, live.schema).coalesce(1))
+    val keyIdx = keys.map(k =>
+      live.schema.fieldNames.indexWhere(spark.sessionState.conf.resolver(_, k)))
+    val keyRows = small.map(_.map(r => org.apache.spark.sql.Row.fromSeq(keyIdx.map(r.get))))
+    val range = keyRows.fold(keyRange(src, keys))(
+      keyRange(_, keyIdx.map(live.schema(_).dataType)))
     val srcKeys = src.select(keyCols: _*)
     val candidates = bloomCandidateDirs(spark,
-      statsCandidateDirs(spark, dirs, range, keys), srcKeys, keys)
+      statsCandidateDirs(spark, dirs, range, keys), keyRows, keys)
 
     // PASS 1: the matched target rows, each with its file. When no dir
     // can match, the table's empty frame stands in (schema anchor: a
@@ -1162,6 +1181,33 @@ object Sinks {
     if (range.anyNull) None else Some(range)
   }
 
+  /** [[keyRange]] of key rows already on the driver (one value per key
+    * column, of the given types), with no job: each column's bounds
+    * are its non-null values' min and max under Spark's ordering for
+    * the type — the `min`/`max` aggregates' order (strings compare as
+    * UTF-8 bytes, not as Java `String`s). */
+  private[graft] def keyRange(keyRows: Seq[org.apache.spark.sql.Row],
+                              types: Seq[DataType]): Option[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    val bounds = types.zipWithIndex.flatMap { case (t, i) =>
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+      val byValue = Ordering.by[(Any, Any), Any](_._2)(TypeUtils.getInterpretedOrdering(t))
+      val vs = keyRows.flatMap(r => Option(r.get(i)).map(v => (v, toCatalyst(v))))
+      Option.when(vs.nonEmpty)(Seq(vs.min(byValue)._1, vs.max(byValue)._1))
+    }
+    Option.when(bounds.size == types.size)(org.apache.spark.sql.Row.fromSeq(bounds.flatten))
+  }
+
+  /** All of `df`'s rows when there are at most [[BloomProbeMaxKeys]]
+    * (one `limit(n+1)` pass); None for a bulk frame, which must never
+    * be collected. */
+  private[graft] def smallRows(df: DataFrame): Option[Seq[org.apache.spark.sql.Row]] = {
+    val rows = df.limit(BloomProbeMaxKeys + 1).collect()
+    Option.when(rows.length <= BloomProbeMaxKeys)(
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))
+  }
+
   /** Committed dirs that MAY contain one of the matched keys —
     * per-file sidecar bounds checked against the keys' [min, max]
     * range for every key column; a dir prunes only when EVERY file's
@@ -1187,9 +1233,10 @@ object Sinks {
     }
   }
 
-  /** Above this many matched keys the merge probe stays range-based:
-    * bloom membership needs the keys ON THE DRIVER, and a bulk
-    * backfill's key set must never be collected. */
+  /** Above this many source rows (or matched keys) a merge keeps its
+    * pinned source and its probe stays range-based: the local source
+    * and bloom membership need the rows ON THE DRIVER, and a bulk
+    * backfill's rows must never be collected. */
   private[graft] val BloomProbeMaxKeys = 10000
 
   /** Bloom refinement of the merge probe — the TAKEDOWN shape: a
@@ -1197,16 +1244,19 @@ object Sinks {
     * gets nothing from range pruning (every dir's `[min, max]` spans
     * every key), but a dir whose per-file blooms reject every key
     * provably contains no match and is dropped before the scan.
-    * Applies only when the key set is small enough to collect (≤
-    * [[BloomProbeMaxKeys]] — one `limit(n+1)` pass over the pinned
-    * keys frame) and only to dirs whose sidecar indexes EVERY key
-    * column; dirs without bloom coverage always stay candidates. A
-    * key row survives a file only when EVERY key column may contain
-    * its value (per-row conjunction — multi-key merges never
-    * cross-match one row's first component with another's second);
-    * the dir stays a candidate when any file admits any row. */
+    * Applies only when the key set is small enough to collect
+    * (`keyRows` holds the key rows, one value per key column — see
+    * [[smallRows]] — or None for a bulk key set; it is evaluated only
+    * when some dir has bloom coverage) and only to dirs whose sidecar
+    * indexes EVERY key column; dirs without bloom coverage always
+    * stay candidates. A key row survives a file only when EVERY key
+    * column may contain its value (per-row conjunction — multi-key
+    * merges never cross-match one row's first component with
+    * another's second); the dir stays a candidate when any file
+    * admits any row. */
   private[graft] def bloomCandidateDirs(spark: org.apache.spark.sql.SparkSession,
-                                        dirs: Seq[String], matchKeys: DataFrame,
+                                        dirs: Seq[String],
+                                        keyRows: => Option[Seq[org.apache.spark.sql.Row]],
                                         keys: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.sources.EqualTo
     if (dirs.isEmpty) return dirs
@@ -1214,8 +1264,7 @@ object Sinks {
     val covered = dirs.filter(d =>
       keys.toSet.subsetOf(BloomIndex.indexedColumns(conf, d)))
     if (covered.isEmpty) return dirs
-    val sample = matchKeys.limit(BloomProbeMaxKeys + 1).collect()
-    if (sample.length > BloomProbeMaxKeys) return dirs // bulk: range-only
+    val sample = keyRows.getOrElse(return dirs) // bulk: range-only
     dirs.filter { d =>
       !covered.contains(d) || (BloomIndex.read(conf, d) match {
         case None => true // torn sidecar: must probe

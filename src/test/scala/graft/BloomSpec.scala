@@ -303,17 +303,17 @@ class BloomSpec extends SparkSuite {
     // unit: keys living only in batch 1 (ids ≡ 1 mod 3) keep only it
     val dirs = (0 until 3).map(m => s"$root/batch=$m")
     val keys1 = Seq(1L, 7L, 601L).toDF("id")
-    val pruned = Sinks.bloomCandidateDirs(spark, dirs, keys1, Seq("id"))
+    val pruned = Sinks.bloomCandidateDirs(spark, dirs, Sinks.smallRows(keys1), Seq("id"))
     assert(pruned == Seq(s"$root/batch=1"))
     // a dir without bloom coverage always stays a candidate
     val fc = new java.io.File(s"$root/batch=2/_bloom.tsv")
     assert(fc.delete())
-    val pruned2 = Sinks.bloomCandidateDirs(spark, dirs, keys1, Seq("id"))
+    val pruned2 = Sinks.bloomCandidateDirs(spark, dirs, Sinks.smallRows(keys1), Seq("id"))
     assert(pruned2 == Seq(s"$root/batch=1", s"$root/batch=2"))
     BloomIndex.writeSidecar(spark, s"$root/batch=2", Seq("id"), fpp = 1e-6)
     // key set above the collect cap: range-only, nothing pruned
     val manyKeys = (0L until Sinks.BloomProbeMaxKeys + 1L).toDF("id")
-    assert(Sinks.bloomCandidateDirs(spark, dirs, manyKeys, Seq("id")) == dirs)
+    assert(Sinks.bloomCandidateDirs(spark, dirs, Sinks.smallRows(manyKeys), Seq("id")) == dirs)
 
     // end-to-end: the takedown delete touches ONLY batch 1; the other
     // two batches' manifest entries survive the commit untouched
@@ -349,7 +349,7 @@ class BloomSpec extends SparkSuite {
     // table now gets without waiting for a compaction
     val dirs = (0 until 2).map(m => s"$root/batch=$m")
     val oddKeys = Seq(1L, 999L).toDF("id")
-    assert(Sinks.bloomCandidateDirs(spark, dirs, oddKeys, Seq("id"))
+    assert(Sinks.bloomCandidateDirs(spark, dirs, Sinks.smallRows(oddKeys), Seq("id"))
       == Seq(s"$root/batch=1"))
     // unindexable type still fails loudly through the convenience hook
     val bad = intercept[IllegalArgumentException] {
@@ -400,7 +400,7 @@ class BloomSpec extends SparkSuite {
       val keys1 = Seq(1L, 7L, 601L).toDF(physId)
       val owning = dirs.find(d => spark.read.parquet(d)
         .where(col(physId) === 1L).count() > 0).get
-      val pruned = Sinks.bloomCandidateDirs(spark, dirs, keys1, Seq(physId))
+      val pruned = Sinks.bloomCandidateDirs(spark, dirs, Sinks.smallRows(keys1), Seq(physId))
       assert(pruned.contains(owning) && pruned.size < dirs.size,
         s"bloom probe kept $pruned of $dirs")
 
@@ -412,7 +412,7 @@ class BloomSpec extends SparkSuite {
       dirs.foreach(d =>
         assert(BloomIndex.indexedColumns(conf, d) == Set(physId)))
       val prunedAfter = Sinks.bloomCandidateDirs(spark, dirs,
-        Seq(2L, 8L, 602L).toDF(physId), Seq(physId))
+        Sinks.smallRows(Seq(2L, 8L, 602L).toDF(physId)), Seq(physId))
       assert(prunedAfter.size < dirs.size,
         s"post-rename bloom probe kept $prunedAfter of $dirs")
       // end-to-end: a point DELETE through the renamed column still

@@ -461,6 +461,89 @@ class PropertySpec extends SparkSuite {
     assert(scanChecks > 0)
   }
 
+  test("MERGE from a source at and one past BloomProbeMaxKeys == the Scala fold, per key type") {
+    import graft.sources.{Sinks, StatsSinks, TxnManifest}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // a source of at most BloomProbeMaxKeys rows continues from a local
+    // relation, one more keeps the pinned plan: both sides of that
+    // choice must give the fold's table and change feed. Each key type
+    // encodes an int in order (so range-split batches prune); the last
+    // case's source leaves a key column all null, so there is no range
+    // and no key matches
+    val n = Sinks.BloomProbeMaxKeys
+    def str(i: Int) = f"k${i + 20000}%06d"
+    def day(i: Int) = java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(10000L + i))
+    val twoCol = Seq(StructField("k1", LongType), StructField("k2", StringType))
+    def pair(i: Int): Seq[Any] = Seq(Math.floorDiv(i, 2).toLong, str(Math.floorMod(i, 2)))
+    val cases: Seq[(String, Seq[StructField], Int => Seq[Any], Int => Seq[Any])] = Seq(
+      ("long", Seq(StructField("k", LongType)), i => Seq(i.toLong), i => Seq(i.toLong)),
+      ("string", Seq(StructField("k", StringType)), i => Seq(str(i)), i => Seq(str(i))),
+      ("decimal", Seq(StructField("k", DecimalType(20, 2))),
+        i => Seq(java.math.BigDecimal.valueOf(i.toLong, 2)),
+        i => Seq(java.math.BigDecimal.valueOf(i.toLong, 2))),
+      ("date", Seq(StructField("k", DateType)), i => Seq(day(i)), i => Seq(day(i))),
+      ("two-column", twoCol, pair, pair),
+      ("null column", twoCol, i => Seq(i.toLong, "t"), i => Seq(i.toLong, null)))
+    // the target: keys 0 until 6000 in three range-split batches; the
+    // source updates the even and deletes every fourth odd key below
+    // 4000 (the last batch is pruned by range) and inserts below 0
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    for ((name, keyFields, tgtKey, srcKey) <- cases; size <- Seq(n, n + 1)) {
+      val keys = keyFields.map(_.name)
+      val schema = StructType(keyFields :+ StructField("v", StringType))
+      def frame(rows: Seq[Row], s: StructType = schema) =
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), s)
+      val tmp = java.nio.file.Files.createTempDirectory(s"mergecap_$name").toString
+      val root = s"$tmp/t"
+      val man = new TxnManifest(s"$tmp/_commits")
+      val target = (0 until 6000).map(i => Row.fromSeq(tgtKey(i) :+ s"t$i"))
+      for (b <- 0 until 3) {
+        StatsSinks.appendBatchStats(frame(target.slice(2000 * b, 2000 * (b + 1))), root, b)
+        man.commit(b, Seq(s"$root/batch=$b"))
+      }
+      val updated = (0 until 4000 by 2) ++ (-1 to -(size - 3000) by -1)
+      val deleted = 1 until 4000 by 4
+      assert(updated.size + deleted.size == size)
+      val ups = updated.map(i => Row.fromSeq(srcKey(i) :+ s"u$i"))
+      val dels = deleted.map(i => Row.fromSeq(srcKey(i)))
+      Sinks.merge(spark, Some(frame(ups)),
+        Some(frame(dels, StructType(keyFields))), root, man, keys,
+        mergeId = 3, cdf = true)
+      // the fold: a key with a null never matches
+      val before = target.map(r => r.toSeq.init -> r).toMap
+      def hit(r: Row) = !r.toSeq.init.contains(null) && before.contains(r.toSeq.init)
+      val (upHit, inserts) = ups.partition(hit)
+      val delHit = dels.filter(r => before.contains(r.toSeq)).map(r => before(r.toSeq))
+      val gone = (upHit.map(_.toSeq.init) ++ delHit.map(_.toSeq.init)).toSet
+      val table = target.filterNot(r => gone(r.toSeq.init)) ++ upHit ++ inserts
+      def tagged(rows: Seq[Row], t: String) = rows.map(r => (r.toSeq :+ t).mkString("|"))
+      val feed = tagged(upHit.map(r => before(r.toSeq.init)), "update_preimage") ++
+        tagged(upHit, "update_postimage") ++ tagged(inserts, "insert") ++
+        tagged(delHit, "delete")
+      val at = s"$name, source of $size rows"
+      assert(rowsOf(Sinks.readCommitted(spark, root, man).select((keys :+ "v").map(col): _*))
+        == table.map(_.toSeq.mkString("|")).sorted, s"$at: table")
+      assert(rowsOf(Sinks.readChanges(spark, root, man, 2, 3)
+        .select((keys :+ "v" :+ Sinks.ChangeTypeCol).map(col): _*)) == feed.sorted,
+        s"$at: change feed")
+      // the driver-side range is the min/max aggregates' range
+      val srcKeys = frame(ups ++ dels.map(r => Row.fromSeq(r.toSeq :+ null)))
+        .select(keys.map(col): _*)
+      assert(Sinks.keyRange(srcKeys.collect().toSeq, keyFields.map(_.dataType)) ==
+        Sinks.keyRange(srcKeys, keys), at)
+      // the merge's source rows: exactly the cap stays local, one more not
+      assert(Sinks.smallRows(srcKeys).isDefined == (size == n), at)
+    }
+    // strings order as UTF-8 bytes, not as Java Strings: U+1F600 sorts
+    // after U+FFFD in Spark and before it in String.compareTo
+    val odd = Seq("a", "\uFFFD", "\uD83D\uDE00", null).toDF("s")
+    val range = Sinks.keyRange(odd.collect().toSeq, Seq(StringType))
+    assert(range == Sinks.keyRange(odd, Seq("s")) &&
+      range.contains(Row("a", "\uD83D\uDE00")), range)
+  }
+
   test("exact z-split write: rows preserved, files bounded, key ranges disjoint") {
     import graft.sources.Layout
     // shapes the cube test never exercises: negative keys (1-column

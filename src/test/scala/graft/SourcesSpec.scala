@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.sql.types._
 import graft.sources.{Sinks, Sources, TxnManifest}
+import scala.jdk.CollectionConverters._
 
 class SourcesSpec extends SparkSuite {
   import spark.implicits._
@@ -1176,5 +1177,55 @@ class SourcesSpec extends SparkSuite {
       Seq("id", "v", "extra", Sinks.ChangeTypeCol, "_commit_batch"))
     assert(feed.where($"id" === 1L).select("extra").head().isNullAt(0))
   }
-}
 
+  test("local writes get Hadoop's permission bits without forking chmod") {
+    import java.nio.file.{Files, Path => JPath}
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{AbstractFileSystem, CreateFlag, FileContext, FileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val local = new java.net.URI("file:///")
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the classpath core-site.xml registers both file system faces
+    assert(FileSystem.get(local, conf).isInstanceOf[graft.util.PosixLocalFileSystem])
+    assert(AbstractFileSystem.get(local, conf).isInstanceOf[graft.util.PosixLocalFs])
+    // a umask unlike the process's (022), so bits the override failed
+    // to set would show; uncached file systems take it from the
+    // session conf on the driver and in the tasks alike
+    def bits(p: JPath): String =
+      s"${Files.isDirectory(p)} ${PosixFilePermissions.toString(Files.getPosixFilePermissions(p))}"
+    def tree(root: JPath): Map[String, String] = {
+      val all = Files.walk(root)
+      try all.iterator().asScala.map(p =>
+        root.relativize(p).toString.replaceAll("[0-9a-f]{8}-[0-9a-f-]{27}", "uuid") -> bits(p))
+        .toMap
+      finally all.close()
+    }
+    def written(fsImpl: String, afsImpl: String): (Map[String, String], Map[String, String]) = {
+      val settings = Seq("fs.permissions.umask-mode" -> "027",
+        "fs.file.impl.disable.cache" -> "true", "fs.file.impl" -> fsImpl,
+        "fs.AbstractFileSystem.file.impl" -> afsImpl)
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val base = Files.createTempDirectory("graft_perm_")
+        Seq(1L, 2L, 3L).toDF("id").repartition(2).write.parquet(s"$base/t")
+        // FileContext, the face streaming checkpoints write through
+        val fc = FileContext.getFileContext(local, spark.sessionState.newHadoopConf())
+        fc.mkdir(new Path(s"$base/fc/dir"),
+          FsPermission.getDirDefault.applyUMask(fc.getUMask), true)
+        fc.create(new Path(s"$base/fc/file"),
+          java.util.EnumSet.of(CreateFlag.CREATE)).close()
+        (tree(base.resolve("t")), tree(base.resolve("fc")))
+      } finally settings.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val ours = written(classOf[graft.util.PosixLocalFileSystem].getName,
+      classOf[graft.util.PosixLocalFs].getName)
+    val hadoops = written("org.apache.hadoop.fs.LocalFileSystem",
+      "org.apache.hadoop.fs.local.LocalFs")
+    assert(ours == hadoops)
+    val (parquet, fc) = ours
+    assert(parquet.exists { case (k, v) => k.startsWith("part-") && v == "false rw-r-----" },
+      parquet)
+    assert(fc == Map("" -> "true rwxr-x---", "dir" -> "true rwxr-x---",
+      "file" -> "false rw-r-----", ".file.crc" -> "false rw-r-----"), fc)
+  }
+}
