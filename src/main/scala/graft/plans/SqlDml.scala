@@ -643,7 +643,8 @@ object GraftDml {
       // old versions vectored, new versions appended, O(changed rows)
       if (entry.deletionVectors)
         Sinks.mergeUpdateDV(spark, ups, entry.root, man, physKeys, mergeId,
-          cdf = entry.cdf, physSchema = physSchema, bucketBy = physBucket)
+          cdf = entry.cdf, unionRoots = entry.isClone,
+          physSchema = physSchema, bucketBy = physBucket)
       else
         Sinks.mergeUpsert(spark, ups, entry.root, man, physKeys, mergeId,
           cdf = entry.cdf, unionRoots = entry.isClone,
@@ -693,7 +694,8 @@ object GraftDml {
       }
       if (entry.deletionVectors)
         Sinks.mergeDeleteDV(spark, delKeys, entry.root, man, physKeys,
-          mergeId, cdf = entry.cdf, physSchema = physSchema)
+          mergeId, cdf = entry.cdf, unionRoots = entry.isClone,
+          physSchema = physSchema)
       else
         Sinks.mergeDelete(spark, delKeys, entry.root, man, physKeys, mergeId,
           cdf = entry.cdf, unionRoots = entry.isClone,

@@ -485,11 +485,6 @@ object Sinks {
     try body finally sc.setJobDescription(prev)
   }
 
-  /** Row-level MERGE (upsert) on the manifest layer — Delta
-    * `MERGE INTO ... WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED
-    * THEN INSERT *` semantics on plain parquet, the write shape behind
-    * the reference's watermark MERGE (`accounts.py:131-140`) and Sync
-    * upserts (`categories.py:84,128`). See [[merge]] for the engine. */
   /** INSERT OVERWRITE on the manifest layer: land the frame as one
     * new batch dir, then atomically un-name EVERYTHING under `root`
     * in its favor — readers see the old table or the new one, never
@@ -539,12 +534,6 @@ object Sinks {
   private[graft] val DvFileCol = "__dv_file"
   private[graft] val DvPosCol = "__dv_pos"
 
-  /** Drop rows a deletion vector names: anti-join on (file path, row
-    * index). `df` must be a direct file-scan frame (the `_metadata`
-    * column exists only there). The DV side is small by the feature's
-    * contract — small deletes — but nothing forces a broadcast: AQE
-    * decides, so a pathological giant DV degrades to a shuffle join
-    * instead of a driver OOM. */
   /** The DV sidecar's fixed schema — passed explicitly so DV reads
     * never pay schema inference (they happen on every read of a
     * DV-carrying table). */
@@ -554,6 +543,12 @@ object Sinks {
     org.apache.spark.sql.types.StructField(DvPosCol,
       org.apache.spark.sql.types.LongType)))
 
+  /** Drop rows a deletion vector names: anti-join on (file path, row
+    * index). `df` must be a direct file-scan frame (the `_metadata`
+    * column exists only there). The DV side is small by the feature's
+    * contract — small deletes — but nothing forces a broadcast: AQE
+    * decides, so a pathological giant DV degrades to a shuffle join
+    * instead of a driver OOM. */
   private[graft] def applyDv(spark: org.apache.spark.sql.SparkSession,
                              df: DataFrame, dvDirs: Seq[String]): DataFrame =
     if (dvDirs.isEmpty) df
@@ -567,192 +562,51 @@ object Sinks {
     }
 
   /** Row-level DELETE without rewriting a byte of data: the
-    * merge-on-read answer to [[mergeDelete]]'s copy-on-write. Matched
-    * rows' (file, position) pairs land in a `_dv/batch=<mergeId>`
-    * sidecar; ONE manifest commit makes them deleted; every affected
-    * data dir stays byte-untouched (the ScaleSpec-pinned contract).
-    * The probe prunes with the same stats/bloom sidecars as merge, so
-    * a 0.1% delete scans the overlapping dirs, not the table. Rows
-    * already deleted by a PRIOR DV are excluded (a re-delete is a
-    * no-op, and with `cdf` their pre-images are not re-recorded).
-    * Compose: reads apply DVs; [[compact]]/[[compactZOrderedN]]
-    * materialize and drop them; [[vacuum]] sweeps crash orphans;
-    * clones inherit them. Trade-off vs COW, same as Delta's: every
-    * read pays the anti-join until compaction — right for small
-    * frequent deletes, wrong for bulk purges (use [[mergeDelete]]). */
+    * merge-on-read answer to [[mergeDelete]]'s copy-on-write, run by
+    * [[mergeRows]] in its deletion-vector mode (the matched rows'
+    * positions land in `_dv/batch=<mergeId>`; every data dir stays
+    * byte-untouched). Trade-off vs COW, same as Delta's: every read
+    * pays the anti-join until compaction materializes the vector —
+    * right for small frequent deletes, wrong for bulk purges (use
+    * [[mergeDelete]]). `unionRoots` is the shallow-clone write path,
+    * as for [[merge]]: the vector may name inherited source files and
+    * lands under the clone's `root`, so the source never sees it. */
   def mergeDeleteDV(spark: org.apache.spark.sql.SparkSession,
                     deleteKeys: DataFrame, root: String,
                     manifest: TxnManifest, keys: Seq[String],
                     mergeId: Int, cdf: Boolean = false,
+                    unionRoots: Boolean = false,
                     physSchema: Option[org.apache.spark.sql.types.StructType] = None)
     : Unit =
-    withJobDescription(spark, s"graft: dv-delete $root -> _dv/batch=$mergeId") {
-    import org.apache.spark.sql.functions.lit
-    val (dataDirs, dvDirs) = splitDv(manifest.committedDirs(root))
-    require(dataDirs.nonEmpty, s"nothing committed under $root to delete from")
-    require(!manifest.committed().contains(mergeId),
-      s"mergeId $mergeId is a live batch id")
-    val target = s"$root/_dv/batch=$mergeId"
-    val keyCols = keys.map(col)
-    val delKeys = deleteKeys.select(keyCols: _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val range = keyRange(delKeys, keys)
-      val candidates = bloomCandidateDirs(spark,
-        statsCandidateDirs(spark, dataDirs, range, keys), smallRows(delKeys), keys)
-      val matched =
-        if (candidates.isEmpty) None
-        else {
-          // positions are captured BEFORE any join (the `_metadata`
-          // column exists only on the scan itself); rows an EARLIER DV
-          // already deleted drop
-          val live = livePositions(spark,
-            inRange(readDirs(spark, candidates, physSchema), range, keys), dvDirs)
-          Some(matchedRows(live, delKeys, keys)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        }
-      // a delete matching nothing still commits: an empty DV, so the
-      // batch id exists and a re-run is idempotent (merge() behaves
-      // the same way with its empty rewrite dir)
-      val positions = matched match {
-        case Some(m) => m.select(DvFileCol, DvPosCol)
-        case None => spark.range(0)
-          .select(lit("").as(DvFileCol), lit(0L).as(DvPosCol))
-      }
-      positions.write.mode(SaveMode.Overwrite).parquet(target)
-      val any = matched.exists(_.limit(1).count() > 0)
-      if (cdf) {
-        val changes = matched match {
-          case Some(m) => m.drop(DvFileCol, DvPosCol)
-            .withColumn(ChangeTypeCol, lit("delete"))
-          case None =>
-            readDirs(spark, dataDirs, physSchema)
-              .limit(0).withColumn(ChangeTypeCol, lit("delete"))
-        }
-        changes.write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/_cdf/batch=$mergeId")
-      }
-      if (cdf || any)
-        writeFeedMarker(root, mergeId, manifest, Set.empty)
-      manifest.commit(mergeId, Seq(target))
-      matched.foreach(_.unpersist())
-    } finally {
-      delKeys.unpersist(); ()
-    }
-  }
+    mergeRows(spark, armsOf(None, Some(deleteKeys), keys), writes = false,
+      deleteWins = false, root, manifest, keys, mergeId, cdf, unionRoots,
+      physSchema, bucketBy = None, deletionVectors = true)
 
-  /** Merge-on-read UPSERT — [[mergeDeleteDV]]'s update sibling and the
-    * round-7 completion of the DV story: matched target rows are
-    * marked deleted in a `_dv/batch=<mergeId>` sidecar and their NEW
-    * versions (plus unmatched inserts) land in one appended
-    * `batch=<mergeId>` dir; a single manifest commit names BOTH, so
-    * readers flip atomically from old versions to new. Cost is
-    * O(changed rows) — no affected-dir rewrite, the Delta DV-update
-    * shape — vs [[mergeUpsert]]'s copy-on-write O(affected dirs).
-    * Result is EXACTLY the COW answer (PropertySpec pins equivalence);
-    * the probe prunes with the same stats/bloom/range sidecars; rows
-    * a PRIOR DV already deleted never re-match; successive DV updates
-    * compose (the second vectors the first's appended version).
-    * Trade-off as with DV deletes: every read pays the positional
-    * anti-filter until compaction materializes — right for frequent
-    * small updates, wrong for bulk rewrites (use [[mergeUpsert]]).
-    * With `cdf`, update pre/post images and inserts land in the
-    * `_cdf` sidecar — the feed serves row-level deltas as for a COW
-    * merge. */
+  /** Merge-on-read UPSERT — [[mergeDeleteDV]]'s update sibling: matched
+    * rows are vectored and their new versions, with the inserts, land
+    * in one appended `batch=<mergeId>` dir, both named by one commit
+    * ([[mergeRows]]'s deletion-vector mode). O(changed rows) vs
+    * [[mergeUpsert]]'s O(affected dirs), with the same answer
+    * (PropertySpec pins it); every read pays the positional
+    * anti-filter until compaction — right for frequent small updates,
+    * wrong for bulk rewrites. */
   def mergeUpdateDV(spark: org.apache.spark.sql.SparkSession,
                     updates: DataFrame, root: String,
                     manifest: TxnManifest, keys: Seq[String],
                     mergeId: Int, cdf: Boolean = false,
+                    unionRoots: Boolean = false,
                     physSchema: Option[org.apache.spark.sql.types.StructType] = None,
                     bucketBy: Option[Bucketing.Spec] = None)
     : Unit =
-    withJobDescription(spark, s"graft: dv-update $root -> batch=$mergeId") {
-    import org.apache.spark.sql.functions.{count, lit}
-    val (dataDirs, dvDirs) = splitDv(manifest.committedDirs(root))
-    require(dataDirs.nonEmpty, s"nothing committed under $root to update")
-    require(!manifest.committed().contains(mergeId),
-      s"mergeId $mergeId is a live batch id")
-    val dvTarget = s"$root/_dv/batch=$mergeId"
-    val dataTarget = s"$root/batch=$mergeId"
-    val keyCols = keys.map(col)
-    val ups = updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one preflight job: per-key counts (duplicate check) and the
-      // global key range fold together — see merge()'s preflight
-      import org.apache.spark.sql.functions.{max => fmax, min => fmin}
-      val preAggs = (fmax(col("__n")) > 1L).as("__dup") +:
-        keys.flatMap(k => Seq(fmin(col(k)), fmax(col(k))))
-      val pre = ups.groupBy(keyCols: _*).agg(count(lit(1)).as("__n"))
-        .agg(preAggs.head, preAggs.tail: _*).collect().head
-      if (!pre.isNullAt(0) && pre.getBoolean(0)) {
-        val dup = ups.groupBy(keyCols: _*).agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"updates are not unique on (${keys.mkString(", ")}): e.g. " +
-            dup.headOption.map(_.toString).getOrElse(""))
-      }
-      val upKeys = ups.select(keyCols: _*).distinct()
-      val rangeRow = org.apache.spark.sql.Row.fromSeq(
-        (0 until 2 * keys.size).map(i => pre.get(i + 1)))
-      val range = if (rangeRow.anyNull) None else Some(rangeRow)
-      val candidates = bloomCandidateDirs(spark,
-        statsCandidateDirs(spark, dataDirs, range, keys), smallRows(upKeys), keys)
-      // old versions of matched keys, with their (file, position) —
-      // the same probe shape as the DV delete, prior DVs excluded
-      val matched =
-        if (candidates.isEmpty) None
-        else {
-          val live = livePositions(spark,
-            inRange(readDirs(spark, candidates, physSchema), range, keys), dvDirs)
-          Some(matchedRows(live, upKeys, keys)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        }
-      val positions = matched match {
-        case Some(m) => m.select(DvFileCol, DvPosCol)
-        case None => spark.range(0)
-          .select(lit("").as(DvFileCol), lit(0L).as(DvPosCol))
-      }
-      positions.write.mode(SaveMode.Overwrite).parquet(dvTarget)
-      // ALL update rows land in the appended dir: matched keys' new
-      // versions and unmatched inserts alike — stats-indexed so the
-      // new generation skips like any other batch. Bucketed tables
-      // route the appended versions like any other write (the DV
-      // side moves no rows, so the layout survives a DV update).
-      val upsOut = bucketBy.fold(ups: DataFrame)(b => Bucketing.routed(ups, b))
-      upsOut.write.mode(SaveMode.Overwrite).parquet(dataTarget)
-      BatchStats.writeSidecar(spark, dataTarget)
-      bucketBy.foreach(b => Bucketing.writeMarkerWithFiles(spark, dataTarget, b))
-      val matchedAny = matched.exists(_.limit(1).count() > 0)
-      if (cdf) {
-        val ct = (t: String) => lit(t).as(ChangeTypeCol)
-        val pre = matched.map(_.drop(DvFileCol, DvPosCol)
-          .withColumn(ChangeTypeCol, ct("update_preimage")))
-        val matchedKeys = matched.map(_.select(keyCols: _*).distinct())
-        val post = matchedKeys.map(mk =>
-          ups.join(mk, keys, "left_semi")
-            .withColumn(ChangeTypeCol, ct("update_postimage")))
-        val ins = matchedKeys.fold(
-          ups.withColumn(ChangeTypeCol, ct("insert")))(mk =>
-          ups.join(mk, keys, "left_anti")
-            .withColumn(ChangeTypeCol, ct("insert")))
-        val changes = (pre.toSeq ++ post.toSeq :+ ins)
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-        changes.write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/_cdf/batch=$mergeId")
-      }
-      // same feed rule as the COW merge: a commit that CHANGED rows
-      // without recording deltas must poison the feed loudly, and a
-      // tracked commit must carry its marker; a nothing-matched
-      // cdf=false update is a pure insert batch (no marker)
-      if (cdf || matchedAny)
-        writeFeedMarker(root, mergeId, manifest, Set.empty)
-      manifest.commit(mergeId, Seq(dataTarget, dvTarget))
-      matched.foreach(_.unpersist())
-    } finally {
-      ups.unpersist(); ()
-    }
-  }
+    mergeRows(spark, armsOf(Some(updates), None, keys), writes = true,
+      deleteWins = false, root, manifest, keys, mergeId, cdf, unionRoots,
+      physSchema, bucketBy, deletionVectors = true)
 
+  /** Row-level MERGE (upsert) on the manifest layer — Delta
+    * `MERGE INTO ... WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED
+    * THEN INSERT *` semantics on plain parquet, the write shape behind
+    * the reference's watermark MERGE (`accounts.py:131-140`) and Sync
+    * upserts (`categories.py:84,128`). See [[merge]] for the engine. */
   def mergeUpsert(spark: org.apache.spark.sql.SparkSession, updates: DataFrame,
                   root: String, manifest: TxnManifest, keys: Seq[String],
                   mergeId: Int, cdf: Boolean = false,
@@ -812,7 +666,16 @@ object Sinks {
             unionRoots: Boolean = false,
             physSchema: Option[org.apache.spark.sql.types.StructType] = None,
             bucketBy: Option[Bucketing.Spec] = None)
-    : Unit = {
+    : Unit =
+    mergeRows(spark, armsOf(updates, deletes, keys),
+      writes = updates.nonEmpty, deleteWins = false, root, manifest, keys,
+      mergeId, cdf, unionRoots, physSchema, bucketBy)
+
+  /** An upsert arm and a delete arm as one tagged [[mergeRows]]
+    * source: update rows update on a match and insert on a miss,
+    * delete keys delete on a match. */
+  private def armsOf(updates: Option[DataFrame], deletes: Option[DataFrame],
+                     keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.lit
     require(updates.nonEmpty || deletes.nonEmpty,
       "merge needs an upsert arm, a delete arm, or both")
@@ -820,10 +683,7 @@ object Sinks {
       .withColumn(OnMissCol, lit(true)))
     val dels = deletes.map(_.select(keys.map(col) ++
       Seq(lit("delete").as(OnMatchCol), lit(false).as(OnMissCol)): _*))
-    mergeRows(spark,
-      (ups ++ dels).reduce(_.unionByName(_, allowMissingColumns = true)),
-      writes = updates.nonEmpty, deleteWins = false, root, manifest, keys,
-      mergeId, cdf, unionRoots, physSchema, bucketBy)
+    (ups ++ dels).reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** The tags a [[mergeRows]] source row carries: [[OnMatchCol]] is
@@ -833,8 +693,10 @@ object Sinks {
   private[graft] val OnMatchCol = "__on_match"
   private[graft] val OnMissCol = "__on_miss"
 
-  /** The two-pass copy-on-write MERGE core (Delta's
-    * find-touched-files-then-rewrite shape) at batch-dir granularity.
+  /** The two-pass MERGE core (Delta's find-touched-files-then-write
+    * shape) at batch-dir granularity, for copy-on-write and for
+    * merge-on-read (`deletionVectors`): pass 1 is shared, only pass 2's
+    * write differs.
     *
     *   1. PRUNE — a batch-sized source (at most [[BloomProbeMaxKeys]]
     *      rows) is collected once and continues as a local relation,
@@ -844,26 +706,37 @@ object Sinks {
     *      whose bloom sidecars reject every key of a batch-sized
     *      source) are never scanned, and the range prunes row groups
     *      inside the rest;
-    *   2. PASS 1 — one scan of the surviving, range-filtered,
-    *      DV-applied candidate dirs, semi-joined with the source keys
-    *      (no forced broadcast — AQE broadcasts a batch-sized key set
-    *      at runtime and degrades a bulk backfill to a shuffle join
-    *      instead of a driver OOM). The matched target rows, with
-    *      their file, and the source rows are grouped by key once:
-    *      that decides every row's action, the touched files, the
-    *      duplicate and ambiguity checks, and the change feed's
-    *      pre-images and deletes, all from one small persisted frame;
-    *   3. PASS 2 — the rewrite, the only other read of the target:
+    *   2. PASS 1 — one scan of the surviving, range-filtered candidate
+    *      dirs, less the rows an earlier deletion vector deleted,
+    *      semi-joined with the source keys (no forced broadcast — AQE
+    *      broadcasts a batch-sized key set at runtime and degrades a
+    *      bulk backfill to a shuffle join instead of a driver OOM).
+    *      The matched target rows, with their file (and, for a
+    *      deletion vector, their row position), and the source rows
+    *      are grouped by key once: that decides every row's action,
+    *      the touched files, the duplicate and ambiguity checks, and
+    *      the change feed's pre-images and deletes, all from one small
+    *      persisted frame;
+    *   3. PASS 2 — the write, in one of two modes.
+    *      Copy-on-write rewrites, the only other read of the target:
     *      the touched dirs' rows anti-joined on the updated and
     *      deleted keys, ∪ update and insert rows, written as ONE new
-    *      batch dir. With `cdf = true` the `_cdf/batch=<mergeId>`
-    *      sidecar (`_change_type` ∈ {update_preimage,
-    *      update_postimage, insert, delete}) is written beside it
-    *      from pass 1's frame alone;
-    *   4. one atomic [[TxnManifest.replaceDirs]] commit swaps exactly
-    *      the touched entries for the new dir. A crash before the
-    *      commit leaves the old view; orphan data and `_cdf` dirs are
-    *      vacuumable.
+    *      `batch=<mergeId>` dir, then one atomic
+    *      [[TxnManifest.replaceDirs]] commit swaps exactly the touched
+    *      entries for it.
+    *      Merge-on-read reads and moves no target byte again: the
+    *      touched rows' (file, position) pairs are written to
+    *      `_dv/batch=<mergeId>` and, when `writes`, the update and
+    *      insert rows to a new `batch=<mergeId>` dir; one
+    *      [[TxnManifest.commit]] names both beside the live entries,
+    *      so readers flip from old versions to new atomically. Reads
+    *      apply the vector until a compaction materializes it.
+    *
+    * Either way, with `cdf = true` the `_cdf/batch=<mergeId>` sidecar
+    * (`_change_type` ∈ {update_preimage, update_postimage, insert,
+    * delete}) is written beside the data from pass 1's frame alone. A
+    * crash before the commit leaves the old view; orphan data, `_dv`
+    * and `_cdf` dirs are vacuumable.
     *
     * A row's action: a matched key any of whose rows says "delete" is
     * deleted and none of its rows updates; otherwise a matched row
@@ -878,7 +751,9 @@ object Sinks {
     *   keys-only delete source, whose columns then never reach the
     *   rewrite or the feed.
     * @param validate called on the rows the merge will update or
-    *   insert, before anything is written (CHECK constraints). */
+    *   insert, before anything is written (CHECK constraints).
+    * @param deletionVectors merge-on-read: pass 2 writes a deletion
+    *   vector instead of rewriting the touched dirs. */
   private[graft] def mergeRows(spark: org.apache.spark.sql.SparkSession,
                                source: DataFrame, writes: Boolean,
                                deleteWins: Boolean, root: String,
@@ -887,7 +762,8 @@ object Sinks {
                                unionRoots: Boolean,
                                physSchema: Option[org.apache.spark.sql.types.StructType],
                                bucketBy: Option[Bucketing.Spec],
-                               validate: DataFrame => Unit = _ => ())
+                               validate: DataFrame => Unit = _ => (),
+                               deletionVectors: Boolean = false)
     : Unit =
     withJobDescription(spark, s"graft: merge $root -> batch=$mergeId") {
     import org.apache.spark.sql.functions.{lit, max, struct, sum, when}
@@ -898,7 +774,14 @@ object Sinks {
     require(dirs.nonEmpty, s"nothing committed under $root to merge into")
     val target = s"$root/batch=$mergeId"
     require(!dirs.contains(target), s"mergeId $mergeId is a live batch")
+    // a deletion vector commits BESIDE the live entries, so its id must
+    // name none of them
+    require(!deletionVectors || !manifest.committed().contains(mergeId),
+      s"mergeId $mergeId is a live batch id")
     val keyCols = keys.map(col)
+    // what pass 2 needs of a matched row: copy-on-write its file, a
+    // deletion vector its (file, position)
+    val posCols = if (deletionVectors) Seq(DvFileCol, DvPosCol) else Seq(DvFileCol)
     val isUpd = col(OnMatchCol) === "update"
     val isDel = col(OnMatchCol) === "delete"
 
@@ -941,13 +824,17 @@ object Sinks {
     val matched =
       if (candidates.isEmpty)
         currentAll.limit(0).withColumn(DvFileCol, lit(null).cast("string"))
-      else matchedRows(livePositions(spark,
-        inRange(readDirs(spark, candidates, physSchema), range, keys), dvDirs)
-        .drop(DvPosCol), srcKeys, keys)
+          .withColumn(DvPosCol, lit(null).cast("long"))
+      else {
+        val scanned = livePositions(spark,
+          inRange(readDirs(spark, candidates, physSchema), range, keys), dvDirs)
+        matchedRows(if (deletionVectors) scanned else scanned.drop(DvPosCol),
+          srcKeys, keys)
+      }
     // source rows and matched target rows side by side, grouped by
     // key: each side's own columns ride in a struct, so neither side's
     // types bend to the other's
-    val tgtCols = matched.columns.filterNot(_ == DvFileCol).toSeq
+    val tgtCols = matched.columns.filterNot(Set(DvFileCol, DvPosCol)).toSeq
     val srcCols = src.columns.filterNot(Set(OnMatchCol, OnMissCol)).toSeq
     val byKey = org.apache.spark.sql.expressions.Window.partitionBy(keyCols: _*)
     def anyOf(c: org.apache.spark.sql.Column) =
@@ -960,8 +847,8 @@ object Sinks {
     val frame = pin(src
       .select(keyCols ++ Seq(col(OnMatchCol), col(OnMissCol),
         struct(srcCols.map(col): _*).as("__src")): _*)
-      .unionByName(matched.select(keyCols ++ Seq(col(DvFileCol),
-        struct(tgtCols.map(col): _*).as("__tgt")): _*),
+      .unionByName(matched.select(keyCols ++ posCols.map(col) :+
+        struct(tgtCols.map(col): _*).as("__tgt"): _*),
         allowMissingColumns = true)
       .select(col("*"),
         // a source row's action; a target row's is its key's
@@ -1006,22 +893,30 @@ object Sinks {
       candidates.filter(d => files.exists(_.startsWith(pathOf(d) + "/")))
     if (writes) validate(updated.unionByName(inserted))
 
-    // PASS 2: the touched dirs less the replaced and deleted keys, ∪
-    // the new rows. The table's current dirs anchor the schema (a
-    // pure delete keeps it; new update columns evolve it)
-    val affected =
-      if (affectedDirs.isEmpty) currentAll.limit(0)
-      else applyDv(spark, readDirs(spark, affectedDirs, physSchema), dvDirs)
-    val kept = affected.join(touched.select(keyCols: _*), keys, "left_anti")
+    // PASS 2, copy-on-write: the touched dirs less the replaced and
+    // deleted keys, ∪ the new rows. The table's current dirs anchor
+    // the schema (a pure delete keeps it; new update columns evolve
+    // it). Merge-on-read writes the new rows alone: the touched rows
+    // stay where they are and the vector hides them
+    val news = updated.unionByName(inserted)
     val merged0 =
-      if (!writes) kept
-      else kept.unionByName(updated.unionByName(inserted),
-        allowMissingColumns = true)
-    // bucketed tables: the rewrite batch routes through the same
+      if (deletionVectors) news
+      else {
+        val affected =
+          if (affectedDirs.isEmpty) currentAll.limit(0)
+          else applyDv(spark, readDirs(spark, affectedDirs, physSchema), dvDirs)
+        val kept = affected.join(touched.select(keyCols: _*), keys, "left_anti")
+        if (!writes) kept else kept.unionByName(news, allowMissingColumns = true)
+      }
+    // bucketed tables: the new batch routes through the same
     // repartition every bucketed write uses (+ the layout marker
-    // below), so the merge output joins exchange-free like any other
-    // batch — copy-on-write preserves the layout
+    // below), so it joins exchange-free like any other batch — neither
+    // write mode breaks the layout
     val merged = bucketBy.fold(merged0)(b => Bucketing.routed(merged0, b))
+    // the dirs this commit un-names: the rewritten ones, or none for a
+    // deletion vector, which only adds entries
+    val removed = if (deletionVectors) Nil else affectedDirs
+    val dvTarget = s"$root/_dv/batch=$mergeId"
     // the CDF sidecar reads ONLY pass 1's frame — nothing it touches
     // depends on the target write, and both dirs become visible
     // together at the manifest commit below, so the two writes overlap;
@@ -1030,33 +925,44 @@ object Sinks {
       val images = touched.select(col("__tgt.*"),
         when(act === "update", lit("update_preimage")).otherwise(lit("delete"))
           .as(ChangeTypeCol))
-      val news =
+      val newImages =
         if (!writes) Nil
         else Seq(updated.withColumn(ChangeTypeCol, lit("update_postimage")),
           inserted.withColumn(ChangeTypeCol, lit("insert")))
-      (images +: news).reduce(_.unionByName(_, allowMissingColumns = true))
+      (images +: newImages).reduce(_.unionByName(_, allowMissingColumns = true))
         .write.mode(SaveMode.Overwrite).parquet(s"$root/_cdf/batch=$mergeId")
     }
     graft.util.Par.both({
         writeCdf()
         // the marker goes in even WITHOUT cdf when rows were MATCHED:
-        // the feed must know this commit collapsed history (and carries
-        // no change records) rather than misread the rewritten table as
-        // an insert batch. A cdf=false merge that matched NOTHING is a
+        // the feed must know this commit changed history (and carries
+        // no change records) rather than misread the new batch as an
+        // insert batch. A cdf=false merge that matched NOTHING is a
         // pure insert — its target dir served as inserts is exactly
         // right, so no marker (and no spurious feed failure)
         if (cdf || affectedDirs.nonEmpty)
-          writeFeedMarker(root, mergeId, manifest, affectedDirs.toSet)
+          writeFeedMarker(root, mergeId, manifest, removed.toSet)
       }, {
-        merged.write.mode(SaveMode.Overwrite).parquet(target)
-        // rewritten dirs may have carried stats sidecars — the merge
-        // output keeps the table skippable (cheap footer pass), and any
-        // bloom coverage the rewritten dirs carried is rebuilt with it
-        BatchStats.writeSidecar(spark, target)
-        BloomIndex.carryOver(spark, affectedDirs, target)
-        bucketBy.foreach(b => Bucketing.writeMarkerWithFiles(spark, target, b))
+        if (deletionVectors)
+          touched.select(DvFileCol, DvPosCol)
+            .write.mode(SaveMode.Overwrite).parquet(dvTarget)
+        if (!deletionVectors || writes) {
+          merged.write.mode(SaveMode.Overwrite).parquet(target)
+          // rewritten dirs may have carried stats sidecars — the merge
+          // output keeps the table skippable (cheap footer pass), and
+          // any bloom coverage the rewritten dirs carried is rebuilt
+          // with it
+          BatchStats.writeSidecar(spark, target)
+          BloomIndex.carryOver(spark, removed, target)
+          bucketBy.foreach(b => Bucketing.writeMarkerWithFiles(spark, target, b))
+        }
       })
-    manifest.replaceDirs(affectedDirs.toSet, mergeId, Seq(target))
+    // a delete matching nothing still commits (an empty rewrite dir or
+    // an empty vector), so the batch id exists and a re-run is
+    // idempotent
+    if (deletionVectors)
+      manifest.commit(mergeId, dvTarget +: Seq(target).filter(_ => writes))
+    else manifest.replaceDirs(removed.toSet, mergeId, Seq(target))
     } finally {
       pinned.foreach(_.unpersist())
       ()
@@ -1130,15 +1036,6 @@ object Sinks {
 
   /** Change-type column the CDF sidecar carries (Delta's name). */
   val ChangeTypeCol = "_change_type"
-
-  /** Pass 1's join reduced to the distinct files holding a matched
-    * key. NO broadcast hint — a batch-sized key set broadcasts via AQE
-    * at runtime; a bulk backfill degrades to a shuffle join instead of
-    * a driver OOM. `current` must be a direct file scan. */
-  private[graft] def affectedFileProbe(current: DataFrame, matchKeys: DataFrame,
-                                       keys: Seq[String]): DataFrame =
-    matchedRows(current.withColumn(DvFileCol, col("_metadata.file_path")),
-      matchKeys, keys).select(DvFileCol).distinct()
 
   /** The target rows whose key some `matchKeys` row carries. */
   private def matchedRows(target: DataFrame, matchKeys: DataFrame,

@@ -6,27 +6,46 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** The parquet file scans the queries of a block ran: every
-  * `FileSourceScanExec` reached from each successful query's physical
-  * plan — through adaptive query stages and into cached relations —
-  * counted once per plan node, so a cached scan that later queries
-  * re-read from the cache counts the one time it ran. */
+/** The physical operators the queries of a block ran: every node
+  * reached from each successful query's physical plan — through
+  * adaptive query stages and into cached relations — counted once per
+  * plan node, so a cached plan that later queries re-read from the
+  * cache counts the one time it ran. */
 object PlanScans {
   /** One scan: the action that ran it, its root paths, rows it output. */
   final case class Scan(action: String, paths: Seq[String], rows: Long)
 
+  /** The parquet file scans (`FileSourceScanExec`) the block ran. */
   def during[A](spark: SparkSession)(body: => A): (A, Seq[Scan]) = {
-    val sc = spark.sparkContext
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
     val out = scala.collection.mutable.ArrayBuffer.empty[Scan]
+    val a = listening(spark) {
+      case (action, s: FileSourceScanExec) => out.synchronized {
+        out += Scan(action, s.relation.location.rootPaths.map(_.toUri.getPath),
+          s.metrics("numOutputRows").value)
+      }
+      case _ => ()
+    }(body)
+    (a, out.synchronized(out.toSeq))
+  }
+
+  /** Every operator the block ran. */
+  def operatorsDuring[A](spark: SparkSession)(body: => A): (A, Seq[SparkPlan]) = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val a = listening(spark)(p => out.synchronized(out += p._2))(body)
+    (a, out.synchronized(out.toSeq))
+  }
+
+  /** Runs `body` with `seen` called on each new operator of each
+    * successful query, as soon as the query finished. */
+  private def listening[A](spark: SparkSession)(
+      seen: ((String, SparkPlan)) => Unit)(body: => A): A = {
+    val sc = spark.sparkContext
+    val visited = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     val listener = new QueryExecutionListener {
       override def onSuccess(action: String, qe: QueryExecution,
-                             durationNs: Long): Unit = out.synchronized {
-        scans(qe.executedPlan).filter(seen.add).foreach { s =>
-          out += Scan(action, s.relation.location.rootPaths.map(_.toUri.getPath),
-            s.metrics("numOutputRows").value)
-        }
+                             durationNs: Long): Unit = visited.synchronized {
+        nodes(qe.executedPlan).filter(visited.add).foreach(p => seen((action, p)))
       }
       override def onFailure(action: String, qe: QueryExecution,
                              e: Exception): Unit = ()
@@ -36,15 +55,14 @@ object PlanScans {
     try {
       val a = body
       org.apache.spark.sql.graftbridge.ListenerBridge.drainListenerBus(sc)
-      (a, out.synchronized(out.toSeq))
+      a
     } finally spark.listenerManager.unregister(listener)
   }
 
-  private def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-    case s: FileSourceScanExec    => Seq(s)
-    case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-    case q: QueryStageExec        => scans(q.plan)
-    case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
-    case other => (other.children ++ other.subqueries).flatMap(scans)
-  }
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec        => nodes(q.plan)
+    case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+    case other => (other.children ++ other.subqueries).flatMap(nodes)
+  })
 }

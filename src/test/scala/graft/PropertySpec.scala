@@ -239,23 +239,32 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  /** The change rows one DV-vs-COW property round committed (batch
+    * `100 + round`), as a sorted multiset. */
+  private def feed(root: String, man: graft.sources.TxnManifest,
+                   round: Int): Seq[(Long, String, String)] =
+    graft.sources.Sinks.readChanges(spark, root, man, 99 + round, 100 + round)
+      .select("id", "v", "_change_type").as[(Long, String, String)]
+      .collect().toSeq.sorted
+
   test("DV delete == COW delete on random tables, keys, and delete sets") {
     import graft.sources.{Sinks, TxnManifest}
     // merge-on-read vs copy-on-write is an execution strategy — for
     // ANY (table, batch split, delete set, second delete) the two
     // must agree exactly, including deletes of absent keys, repeated
-    // deletes, and an empty delete
+    // deletes, and an empty delete; with cdf, so must their feeds
     val cases = Gen.listOfN(4, for {
       n      <- Gen.chooseNum(5, 200)
       splits <- Gen.chooseNum(1, 4)
       del1   <- Gen.listOf(Gen.chooseNum(-20L, 220L))
       del2   <- Gen.listOf(Gen.chooseNum(-20L, 220L))
     } yield (n, splits, del1, del2)).sample.get
-    for (((n, splits, del1, del2), ci) <- cases.zipWithIndex) {
+    for (((n, splits, del1, del2), ci) <- cases.zipWithIndex;
+         cdf <- Seq(false, true)) {
       val rows = (0 until n).map(i => (i.toLong, s"v$i"))
       def build(tag: String): (String, TxnManifest) = {
         val tmp = java.nio.file.Files
-          .createTempDirectory(s"dvprop_${ci}_$tag").toString
+          .createTempDirectory(s"dvprop_${ci}_${cdf}_$tag").toString
         val root = s"$tmp/t"
         val man = new TxnManifest(s"$tmp/_commits")
         for (b <- 0 until splits) {
@@ -270,15 +279,17 @@ class PropertySpec extends SparkSuite {
       for ((del, round) <- Seq(del1, del2).zipWithIndex) {
         val keys = del.toDF("id")
         Sinks.mergeDeleteDV(spark, keys, dvRoot, dvMan, Seq("id"),
-          mergeId = 100 + round)
+          mergeId = 100 + round, cdf = cdf)
         Sinks.mergeDelete(spark, keys, cowRoot, cowMan, Seq("id"),
-          mergeId = 100 + round)
+          mergeId = 100 + round, cdf = cdf)
         val got = Sinks.readCommitted(spark, dvRoot, dvMan)
           .select("id", "v").as[(Long, String)].collect().sorted.toSeq
         val want = Sinks.readCommitted(spark, cowRoot, cowMan)
           .select("id", "v").as[(Long, String)].collect().sorted.toSeq
         assert(got == want,
           s"case $ci round $round: DV ${got.size} rows vs COW ${want.size}")
+        if (cdf) assert(feed(dvRoot, dvMan, round) == feed(cowRoot, cowMan, round),
+          s"case $ci round $round: DV and COW change feeds differ")
         // the DSv2 face agrees with the Scala face
         val dsv2 = spark.read.format("graft-manifest")
           .option("manifest", s"${dvRoot.stripSuffix("/t")}/_commits")
@@ -295,18 +306,20 @@ class PropertySpec extends SparkSuite {
     // batch split, update set, second OVERLAPPING update set) the
     // merge-on-read answer must equal copy-on-write exactly —
     // including pure inserts, re-updates of the same key (the second
-    // vector hides the first's appended version), and empty updates
+    // vector hides the first's appended version), and empty updates;
+    // with cdf, so must their feeds
     val cases = Gen.listOfN(4, for {
       n    <- Gen.chooseNum(5, 200)
       splits <- Gen.chooseNum(1, 4)
       up1  <- Gen.listOf(Gen.chooseNum(-20L, 220L))
       up2  <- Gen.listOf(Gen.chooseNum(-20L, 220L))
     } yield (n, splits, up1, up2)).sample.get
-    for (((n, splits, up1, up2), ci) <- cases.zipWithIndex) {
+    for (((n, splits, up1, up2), ci) <- cases.zipWithIndex;
+         cdf <- Seq(false, true)) {
       val rows = (0 until n).map(i => (i.toLong, s"v$i"))
       def build(tag: String): (String, TxnManifest) = {
         val tmp = java.nio.file.Files
-          .createTempDirectory(s"dvuprop_${ci}_$tag").toString
+          .createTempDirectory(s"dvuprop_${ci}_${cdf}_$tag").toString
         val root = s"$tmp/t"
         val man = new TxnManifest(s"$tmp/_commits")
         for (b <- 0 until splits) {
@@ -321,15 +334,17 @@ class PropertySpec extends SparkSuite {
       for ((up, round) <- Seq(up1, up2).zipWithIndex) {
         val ups = up.distinct.map(i => (i, s"u$round-$i")).toDF("id", "v")
         Sinks.mergeUpdateDV(spark, ups, dvRoot, dvMan, Seq("id"),
-          mergeId = 100 + round)
+          mergeId = 100 + round, cdf = cdf)
         Sinks.mergeUpsert(spark, ups, cowRoot, cowMan, Seq("id"),
-          mergeId = 100 + round)
+          mergeId = 100 + round, cdf = cdf)
         val got = Sinks.readCommitted(spark, dvRoot, dvMan)
           .select("id", "v").as[(Long, String)].collect().sorted.toSeq
         val want = Sinks.readCommitted(spark, cowRoot, cowMan)
           .select("id", "v").as[(Long, String)].collect().sorted.toSeq
         assert(got == want,
           s"case $ci round $round: DV ${got.size} rows vs COW ${want.size}")
+        if (cdf) assert(feed(dvRoot, dvMan, round) == feed(cowRoot, cowMan, round),
+          s"case $ci round $round: DV and COW change feeds differ")
         val dsv2 = spark.read.format("graft-manifest")
           .option("manifest", s"${dvRoot.stripSuffix("/t")}/_commits")
           .load(dvRoot).select("id", "v")

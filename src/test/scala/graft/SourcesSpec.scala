@@ -359,15 +359,18 @@ class SourcesSpec extends SparkSuite {
   test("merge probe prunes dirs by key-range stats; no forced broadcast") {
     import graft.sources.StatsSinks
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val tmp = java.nio.file.Files.createTempDirectory("merge_stats_").toString
-    val root = s"$tmp/t"
-    val man = new TxnManifest(s"$tmp/_commits")
     // three stats-sidecar'd batches with disjoint key ranges
-    for ((lo, b) <- Seq((0L, 0), (1000L, 1), (2000L, 2))) {
-      StatsSinks.appendBatchStats(
-        (lo until lo + 100L).map(i => (i, s"v$i")).toDF("id", "v"), root, b)
-      man.commit(b, Seq(s"$root/batch=$b"))
+    def table(): (String, TxnManifest) = {
+      val tmp = java.nio.file.Files.createTempDirectory("merge_stats_").toString
+      val man = new TxnManifest(s"$tmp/_commits")
+      for ((lo, b) <- Seq((0L, 0), (1000L, 1), (2000L, 2))) {
+        StatsSinks.appendBatchStats(
+          (lo until lo + 100L).map(i => (i, s"v$i")).toDF("id", "v"), s"$tmp/t", b)
+        man.commit(b, Seq(s"$tmp/t/batch=$b"))
+      }
+      (s"$tmp/t", man)
     }
+    val (root, man) = table()
     // keys [1010, 1020] overlap ONLY batch=1 — stats prune 0 and 2
     // before any scan
     val keys = (1010L to 1020L).toDF("id")
@@ -389,36 +392,37 @@ class SourcesSpec extends SparkSuite {
       .count() == 11)
 
     // plan shape of the probe join: AQE broadcasts a small key set;
-    // with broadcast disabled the SAME probe degrades to a shuffled
+    // with broadcast disabled the SAME merge degrades to a shuffled
     // join (no driver-side OOM cliff) with identical results
-    val current = spark.read.parquet(man.committedDirs(root): _*)
-    def probeFiles(threshold: String): Set[String] = {
+    def mergedWith(threshold: String, aqe: Boolean)
+      : (Seq[(Long, String)], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+      val (r, m) = table()
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", threshold)
-      try Sinks.affectedFileProbe(current, (0L to 50L).toDF("id"), Seq("id"))
-        .collect().map(_.getString(0)).toSet
-      finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      val (_, ops) = try PlanScans.operatorsDuring(spark) {
+        Sinks.mergeUpsert(spark,
+          (0L to 50L).toDF("id").select($"id", concat(lit("p"), $"id").as("v")),
+          r, m, Seq("id"), mergeId = 5)
+      } finally {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
       }
+      (Sinks.readCommitted(spark, r, m).as[(Long, String)]
+        .collect().toSeq.sorted, ops)
     }
-    val small = probeFiles("10485760")
-    val shuffled = probeFiles("-1")
-    assert(small == shuffled && small.nonEmpty)
-    // and the shuffled variant's plan really has no broadcast arm
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = Sinks.affectedFileProbe(current, (0L to 50L).toDF("id"),
-        Seq("id")).queryExecution.executedPlan
-      assert(plan.collectWithSubqueries {
-        case e: ShuffleExchangeExec => e }.nonEmpty, s"expected shuffle:\n$plan")
-      assert(!plan.toString.contains("BroadcastHashJoin"),
-        s"unexpected broadcast:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
+    val (small, _) = mergedWith("10485760", aqe = true)
+    val (shuffled, plan) = mergedWith("-1", aqe = false)
+    assert(small == shuffled && small.count(_._2.startsWith("p")) == 51)
+    // and the shuffled variant's plans really have no broadcast arm
+    assert(plan.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"expected shuffle:\n${plan.mkString("\n")}")
+    assert(plan.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
+      s"expected a shuffled join:\n${plan.mkString("\n")}")
+    assert(!plan.exists(_.nodeName.contains("BroadcastHashJoin")),
+      s"unexpected broadcast:\n${plan.mkString("\n")}")
   }
 
   test("compact + vacuum: atomic re-point, orphan cleanup, dual-root safety") {

@@ -1541,6 +1541,52 @@ class SqlSurfaceSpec extends SparkSuite {
     GraftSql.execute(spark, "DROP TABLE IF EXISTS gcl.src")
   }
 
+  test("deletion-vector DELETE and UPDATE on a SHALLOW CLONE: clone diverges, source untouched") {
+    import graft.plans.{GraftCatalog, GraftSql}
+    val wh = java.nio.file.Files.createTempDirectory("graft_dvcl_wh_").toString
+    spark.conf.set("spark.sql.catalog.gdvc", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gdvc.warehouse", wh)
+    GraftSql.execute(spark, "DROP TABLE IF EXISTS gdvc.src")
+    GraftSql.execute(spark,
+      """CREATE TABLE gdvc.src (id BIGINT, v STRING)
+        |USING `graft-manifest` TBLPROPERTIES ('keys' = 'id')""".stripMargin)
+    GraftSql.execute(spark,
+      "INSERT INTO gdvc.src VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    GraftSql.execute(spark, "CREATE TABLE gdvc.cl SHALLOW CLONE gdvc.src")
+    GraftSql.execute(spark,
+      "ALTER TABLE gdvc.cl SET TBLPROPERTIES ('deletionVectors' = 'true')")
+    // a sorted row list, not a map: a row the vector failed to hide
+    // would show up as a second version of its key
+    def rows(t: String): Seq[(Long, String)] =
+      spark.sql(s"SELECT id, v FROM $t").as[(Long, String)].collect().toSeq.sorted
+    val srcRows = Seq(1L -> "a", 2L -> "b", 3L -> "c")
+    // the clone's own root holds nothing yet: the vector names
+    // inherited source files
+    GraftSql.execute(spark, "DELETE FROM gdvc.cl WHERE id = 2")
+    assert(rows("gdvc.cl") == Seq(1L -> "a", 3L -> "c"))
+    assert(rows("gdvc.src") == srcRows)
+    GraftSql.execute(spark, "UPDATE gdvc.cl SET v = 'X' WHERE id = 1")
+    assert(rows("gdvc.cl") == Seq(1L -> "X", 3L -> "c"))
+    // with a batch of the clone's own under its root
+    GraftSql.execute(spark, "INSERT INTO gdvc.cl VALUES (4, 'd')")
+    GraftSql.execute(spark, "DELETE FROM gdvc.cl WHERE id = 3")
+    GraftSql.execute(spark, "UPDATE gdvc.cl SET v = 'Y' WHERE id = 4")
+    val want = Seq(1L -> "X", 4L -> "Y")
+    assert(rows("gdvc.cl") == want)
+    assert(rows("gdvc.src") == srcRows)
+    // every vector and new version lives under the clone's root
+    val clMan = new graft.sources.TxnManifest(s"$wh/cl/_commits")
+    assert(clMan.committedDirsAll().filterNot(_.startsWith(s"$wh/src/"))
+      .forall(_.startsWith(s"$wh/cl/")))
+    // OPTIMIZE materializes the clone through its vectors
+    GraftSql.execute(spark, "OPTIMIZE gdvc.cl")
+    assert(rows("gdvc.cl") == want)
+    assert(clMan.committedDirsAll().forall(_.startsWith(s"$wh/cl/")))
+    assert(rows("gdvc.src") == srcRows)
+    Seq("cl", "src").foreach(t =>
+      GraftSql.execute(spark, s"DROP TABLE IF EXISTS gdvc.$t"))
+  }
+
   test("snapshot clones (VERSION/TIMESTAMP AS OF) and clone-of-clone") {
     import graft.plans.{GraftCatalog, GraftSql}
     val wh = java.nio.file.Files.createTempDirectory("graft_scl_wh_").toString
